@@ -189,7 +189,11 @@ def ensure_parallelism(df: DataFrame, min_ratio: float = 1.0) -> DataFrame:
     spread binomially evenly. Consumers are partition-invariant by
     this guard's contract, so assignment-by-content vs assignment-by-
     arrival changes nothing observable. Frames with map-typed columns
-    (not hashable in Spark) keep the round-robin path."""
+    (not hashable in Spark), with no columns (every row would hash
+    alike and land in one partition) or with duplicate column names
+    (not addressable by name) keep the round-robin path. Identical rows
+    still hash alike, so a frame made mostly of duplicate rows spreads
+    over few partitions."""
     if df.isStreaming:
         return df
     target = max(
@@ -207,11 +211,14 @@ def ensure_parallelism(df: DataFrame, min_ratio: float = 1.0) -> DataFrame:
         pass  # plan dump unavailable: fall through to the exact probe
     if df.rdd.getNumPartitions() < target:
         n = df.sparkSession.sparkContext.defaultParallelism
-        if any(_contains_map(f.dataType) for f in df.schema.fields):
+        cols = df.columns
+        if (
+            not cols
+            or len(set(cols)) < len(cols)
+            or any(_contains_map(f.dataType) for f in df.schema.fields)
+        ):
             return df.repartition(n)
-        return df.repartition(
-            n, F.xxhash64(F.struct(*[df[c] for c in df.columns]))
-        )
+        return df.repartition(n, F.xxhash64(F.struct(*[df[c] for c in cols])))
     return df
 
 

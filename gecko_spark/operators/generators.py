@@ -13,10 +13,8 @@ same seed reproduces the same dataset under any partitioning.
 
 Scale notes (100 TB north star):
 * frequency-table sampling is inverse-CDF over the integer cumulative
-  frequency array; small tables (k ≤ ``jvm_max_table``) run fully
-  JVM-side inside codegen via a filter-count over an array literal,
-  larger tables use one Arrow ``pandas_udf`` with ``np.searchsorted``
-  (O(log k) per row) over a broadcast array;
+  frequency array: a JVM binary search over an array literal, O(log k)
+  per row for every table size, with no Python in the plan;
 * ``from_group(exact=True)`` achieves gecko's exact per-group counts
   WITHOUT the reference's global shuffle (gecko/generator.py:415-419):
   rows are assigned to groups by index ranges under an affine bijection
@@ -26,6 +24,7 @@ Scale notes (100 TB north star):
 
 from __future__ import annotations
 
+import json
 import math
 from dataclasses import dataclass
 from typing import Callable, Optional, Sequence, Union
@@ -172,62 +171,59 @@ class FrequencyTableGenerator(ColumnGenerator):
     Joint sampling preserves inter-column dependence: a drawn index
     selects one table ROW, and every output column projects from that
     row (gecko/generator.py:243-253, tests/test_generator.py:98-124).
+
+    The index is the upper bound of ``u_int`` in the integer cumulative
+    frequencies (``np.searchsorted(cum, u_int, side="right")``), found
+    by a JVM binary search; values project with ``element_at``. Both
+    table arrays enter the plan as single JSON-decoded literals.
     """
 
-    def __init__(self, values: pd.DataFrame, freqs: np.ndarray, jvm_max_table: int = 1024):
+    def __init__(self, values: pd.DataFrame, freqs: np.ndarray):
         self.values = values
         self.freqs = freqs.astype(np.int64)
         self.cum = np.cumsum(self.freqs)
         self.total = int(self.cum[-1])
-        self.jvm_max_table = jvm_max_table
         self.arity = values.shape[1]
 
     def index_column(self, rand: RandomSource) -> Column:
         """Sampled config-row index in [0, k) as a LongType column."""
-        u_int = F.floor(rand.uniform(0) * F.lit(float(self.total))).cast("long")
+        u_int = rand.uniform_int(0, self.total)
+        cum = _array_literal(self.cum.tolist(), "bigint")
         k = len(self.cum)
-        if k <= self.jvm_max_table:
-            # JVM path: count cumulative frequencies <= u_int. Stays
-            # inside whole-stage codegen; O(k) vectorized per row.
-            cum_arr = F.lit([int(c) for c in self.cum])
-            return F.size(F.filter(cum_arr, lambda c: c <= u_int)).cast("long")
 
-        # Arrow path for large tables: binary search over the broadcast
-        # cumulative array.
-        cum = self.cum
-
-        @F.pandas_udf(T.LongType())
-        def _search(u: pd.Series) -> pd.Series:
-            return pd.Series(
-                np.searchsorted(cum, u.to_numpy(np.int64), side="right"), index=u.index
+        # Upper-bound search carrying (lo, hi, u): u is evaluated once per
+        # row, and each step halves hi - lo, so k.bit_length() =
+        # ceil(log2(k+1)) steps reach lo == hi; later steps keep it.
+        def step(acc: Column, _i: Column) -> Column:
+            lo, hi, u = acc["lo"], acc["hi"], acc["u"]
+            mid = F.shiftright(lo + hi, 1)
+            return (
+                F.when(lo >= hi, acc)
+                .when(
+                    F.element_at(cum, mid + F.lit(1)) <= u,
+                    F.struct((mid + F.lit(1)).alias("lo"), hi.alias("hi"), u.alias("u")),
+                )
+                .otherwise(F.struct(lo.alias("lo"), mid.alias("hi"), u.alias("u")))
             )
 
-        return _search(u_int)
+        start = F.struct(F.lit(0).alias("lo"), F.lit(k).alias("hi"), u_int.alias("u"))
+        steps = F.sequence(F.lit(1), F.lit(k.bit_length()))
+        return F.aggregate(steps, start, step, lambda acc: acc["lo"]).cast("long")
 
     def columns(self, rand: RandomSource, ctx: Optional[GenContext] = None) -> list[Column]:
-        idx = self.index_column(rand)
-        k = len(self.cum)
-        if k <= self.jvm_max_table:
-            out = []
-            for c in self.values.columns:
-                arr = F.lit([str(v) for v in self.values[c].tolist()])
-                out.append(F.element_at(arr, (idx + F.lit(1)).cast("int")))
-            return out
+        pos = (self.index_column(rand) + F.lit(1)).cast("int")
+        return [
+            F.element_at(_array_literal([str(v) for v in self.values[c].tolist()], "string"), pos)
+            for c in self.values.columns
+        ]
 
-        # Large table: one Arrow kernel returns all value columns as a
-        # struct; field projection happens JVM-side.
-        values = self.values
-        fields = [T.StructField(f"c{i}", T.StringType()) for i in range(self.arity)]
 
-        @F.pandas_udf(T.StructType(fields))
-        def _project(idx_s: pd.Series) -> pd.DataFrame:
-            taken = values.iloc[idx_s.to_numpy(np.int64)].reset_index(drop=True)
-            taken.columns = [f"c{i}" for i in range(len(values.columns))]
-            taken.index = idx_s.index
-            return taken
-
-        struct = _project(idx)
-        return [struct.getField(f"c{i}") for i in range(self.arity)]
+def _array_literal(items: list, element_type: str) -> Column:
+    """An array literal built with one JVM call: ``F.lit(list)`` makes
+    one call per element. The optimizer folds it to a constant."""
+    return F.from_json(
+        F.lit(json.dumps(items, ensure_ascii=False)), f"array<{element_type}>"
+    )
 
 
 def from_frequency_table(
@@ -236,7 +232,6 @@ def from_frequency_table(
     freq_column: Union[str, int] = 1,
     encoding: str = "utf-8",
     delimiter: str = ",",
-    jvm_max_table: int = 1024,
 ) -> FrequencyTableGenerator:
     """Weighted categorical sampling from a (value, freq) table
     (gecko/generator.py:110-170). Header presence inferred from the
@@ -244,7 +239,7 @@ def from_frequency_table(
     values, freqs = load_frequency_table(
         data_source, value_column, freq_column, delimiter=delimiter, encoding=encoding
     )
-    return FrequencyTableGenerator(values, freqs, jvm_max_table)
+    return FrequencyTableGenerator(values, freqs)
 
 
 def from_multicolumn_frequency_table(
@@ -253,14 +248,13 @@ def from_multicolumn_frequency_table(
     freq_column: Union[str, int] = 1,
     encoding: str = "utf-8",
     delimiter: str = ",",
-    jvm_max_table: int = 1024,
 ) -> FrequencyTableGenerator:
     """Joint sampling of value tuples from a k-column frequency table
     (gecko/generator.py:173-254)."""
     values, freqs = load_frequency_table(
         data_source, value_columns, freq_column, delimiter=delimiter, encoding=encoding
     )
-    return FrequencyTableGenerator(values, freqs, jvm_max_table)
+    return FrequencyTableGenerator(values, freqs)
 
 
 # ---------------------------------------------------------------------------

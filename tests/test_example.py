@@ -159,6 +159,35 @@ def test_ensure_parallelism_ladder(spark):
     assert ensure_parallelism(stream) is stream
 
 
+def test_ensure_parallelism_spreads_frames_without_columns(spark):
+    """A frame with no columns gives every row the same value hash, so
+    it must take the round-robin spread instead."""
+    from pyspark.sql import functions as F
+
+    from gecko_spark.operators.dedup import ensure_parallelism
+
+    widened = ensure_parallelism(spark.range(0, 100, 1, 1).select())
+    assert widened.columns == []
+    assert widened.count() == 100
+    used = widened.select(F.spark_partition_id().alias("p")).distinct().count()
+    assert used >= min(spark.sparkContext.defaultParallelism, 2)
+
+
+def test_ensure_parallelism_duplicate_column_names(spark):
+    """Duplicate column names cannot be addressed by name; the guard
+    must still spread the frame."""
+    from pyspark.sql import functions as F
+
+    from gecko_spark.operators.dedup import ensure_parallelism
+
+    one = spark.range(0, 100, 1, 1)
+    dup = one.select(F.col("id").alias("a"), (F.col("id") * 2).alias("a"))
+    widened = ensure_parallelism(dup)
+    assert widened.columns == ["a", "a"]
+    assert widened.rdd.getNumPartitions() >= min(spark.sparkContext.defaultParallelism, 2)
+    assert sorted(r[1] for r in widened.collect()) == list(range(0, 200, 2))
+
+
 def test_streaming_pipeline_example(spark):
     from streaming_pipeline import run_to_memory
 

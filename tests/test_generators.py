@@ -69,15 +69,50 @@ def test_multicolumn_frequency_table_joint_dependence(spark, fruit_type_freq):
     assert len(pairs) == 6  # all rows observed at N=20k
 
 
-def test_multicolumn_large_table_udf_path(spark):
-    k = 50
-    tbl = pd.DataFrame({"a": [f"a{i}" for i in range(k)],
-                        "b": [f"b{i}" for i in range(k)],
-                        "n": [1] * k})
-    gen = G.from_multicolumn_frequency_table(tbl, ["a", "b"], "n", jvm_max_table=10)
-    df = _gen(spark, [(("a", "b"), gen)], n=5000)
-    pdf = df.toPandas()
-    assert (pdf["a"].str[1:] == pdf["b"].str[1:]).all()  # rows stay joint
+def test_multicolumn_large_table_rows_stay_joint(spark):
+    # Rows must stay joint, and values must round-trip unchanged through
+    # the plan's array literals, whatever characters they hold.
+    k = 1500
+    special = ["", "a,b", 'say "hi"', "back\\slash", "tab\there", "Müller", "日本語", "😀", "[1]", "null"]
+    a = special + [f"a{i}" for i in range(len(special), k)]
+    tbl = pd.DataFrame({"a": a, "b": [f"b{i}" for i in range(k)],
+                        "n": [100] * len(special) + [1] * (k - len(special))})
+    gen = G.from_multicolumn_frequency_table(tbl, ["a", "b"], "n")
+    pdf = _gen(spark, [(("a", "b"), gen)], n=5000).toPandas()
+    assert (pdf["a"] == pdf["b"].map(dict(zip(tbl["b"], tbl["a"])))).all()
+    assert set(special) <= set(pdf["a"])
+
+
+@pytest.mark.parametrize(
+    "weights",
+    [
+        [7],
+        [0, 0, 3, 0, 5, 0, 0, 2, 0, 0],  # leading, inner and trailing zeros
+        [1] * 63,
+        [1] * 64,
+        [1] * 65,
+        list(range(1, 3876)),
+    ],
+    ids=["k1", "zeros", "k63", "k64", "k65", "k3875"],
+)
+def test_frequency_table_index_is_exact_upper_bound(spark, weights):
+    """The sampled row is the upper bound of the integer draw in the
+    cumulative weights: ``np.searchsorted(cum, u_int, side="right")``,
+    under both randomness sources."""
+    from gecko_spark.core import HashRandom, LcgRandom
+
+    gen = G.FrequencyTableGenerator(
+        pd.DataFrame({"v": [f"v{i}" for i in range(len(weights))]}), np.array(weights)
+    )
+    seed = spark.range(0, 5000).withColumnRenamed("id", "__idx__")
+    for rand in (HashRandom(11, ["__idx__"]), LcgRandom("__idx__", 11)):
+        u_int = rand.uniform_int(0, gen.total)
+        pdf = seed.select(
+            u_int.alias("u"), gen.index_column(rand).alias("i"), gen.columns(rand)[0].alias("v")
+        ).toPandas()
+        expected = np.searchsorted(gen.cum, pdf["u"].to_numpy(), side="right")
+        np.testing.assert_array_equal(pdf["i"].to_numpy(), expected)
+        assert (pdf["v"].to_numpy() == gen.values["v"].to_numpy()[expected]).all()
 
 
 def test_datetime_range_bounds_and_format(spark):

@@ -36,6 +36,31 @@ def test_generator_spec_is_one_narrow_stage(spark, fruit_freq):
     assert "Join" not in p, "independent columns must not join"
 
 
+def test_frequency_tables_sample_without_python(spark):
+    """Frequency-table sampling stays on the JVM at every table size:
+    no Arrow or batch Python evaluation node in the generation plan."""
+    import pandas as pd
+
+    from gecko_spark.operators import generators as G
+    from gecko_spark.plans.pipeline import to_data_frame
+
+    def table(k, cols):
+        return pd.DataFrame({**{c: [f"{c}{i}" for i in range(k)] for c in cols}, "n": range(1, k + 1)})
+
+    df = to_data_frame(
+        spark,
+        [
+            (("g", "h"), G.from_multicolumn_frequency_table(table(60, ["g", "h"]), ["g", "h"], "n")),
+            ("s", G.from_frequency_table(table(416, ["s"]), "s", "n")),
+            ("l", G.from_frequency_table(table(3875, ["l"]), "l", "n")),
+        ],
+        1000,
+        seed=1,
+    )
+    p = _plan(df)
+    assert "ArrowEvalPython" not in p and "BatchEvalPython" not in p
+
+
 def test_mutator_chain_adds_no_exchange(spark, fruit_freq):
     from gecko_spark.operators import generators as G
     from gecko_spark.operators import mutators as M
