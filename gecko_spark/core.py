@@ -46,6 +46,23 @@ def _to_col(c: ColumnOrName) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
+def driver_memory(physical_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` for :func:`get_spark`:
+    ``GECKO_SPARK_DRIVER_MEM`` when set, else half the machine's physical
+    memory in whole GiB, at least 1g and at most 16g. In local mode the
+    driver JVM runs every task, so this is the engine's whole heap; the
+    other half stays with the Python workers and the OS. Where physical
+    memory cannot be read, the cap."""
+    if os.environ.get("GECKO_SPARK_DRIVER_MEM"):
+        return os.environ["GECKO_SPARK_DRIVER_MEM"]
+    if physical_bytes is None:
+        try:
+            physical_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, ValueError, OSError):
+            return "16g"
+    return f"{min(16, max(1, physical_bytes // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "gecko-spark",
     cpus: int | None = None,
@@ -56,7 +73,7 @@ def get_spark(
 
     On a real cluster users bring their own session; every operator in
     this package only needs a plain ``SparkSession`` and sets no global
-    state.
+    state. The driver heap comes from :func:`driver_memory`.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
@@ -75,7 +92,7 @@ def get_spark(
         # (sources/datasource.py); harmless when no python source reads
         .config("spark.sql.python.filterPushdown.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("GECKO_SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

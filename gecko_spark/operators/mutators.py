@@ -19,7 +19,10 @@ codegen; the four table-driven mutators (CLDR typos, phonetic /
 inline-replacement / regex tables) each run ONE Arrow ``pandas_udf``
 whose inputs are (value, selection flag, uniform draws) — kernels are
 pure functions, all randomness is derived JVM-side (core.py policy), so
-results are partitioning-independent.
+results are partitioning-independent. Three of them (inline
+replacement, phonetic and regex tables) order their rules by global
+match counts, measured by one distinct-value job
+(:func:`count_rule_matches`).
 """
 
 from __future__ import annotations
@@ -108,11 +111,22 @@ class Mutator:
         return F.when(selected, self._mutate(col, rand)).otherwise(col)
 
     def _transform_with_frame(
-        self, df: DataFrame, col: Column, rand: RandomSource, selected: Column
+        self,
+        df: DataFrame,
+        col: Column,
+        rand: RandomSource,
+        selected: Column,
+        counts: Optional[np.ndarray] = None,
     ) -> Column:
         """Hook for mutators that need a pre-pass over the input frame
-        (e.g. global rule-match frequencies). Default: no pre-pass."""
+        (global rule-match counts; ``counts`` hands in ones already
+        measured). Default: no pre-pass."""
         return self._transform(col, rand, selected)
+
+    def _needs_rule_counts(self) -> bool:
+        """True when ``_transform_with_frame`` would count rule matches
+        over the frame unless ``counts`` are handed in."""
+        return False
 
     # -- group hooks ---------------------------------------------------------
     def _eligible_group(self, cols: list[Column], rand: RandomSource) -> Optional[Column]:
@@ -151,7 +165,20 @@ class Mutator:
             # hold constant values, which would make every row share one
             # draw (all-or-nothing selection)
             rand = HashRandom(seed, [F.col(c) for c in df.columns])
+        return self._apply(df, columns, p, rand, strict_p)
 
+    def _apply(
+        self,
+        df: DataFrame,
+        columns: list[str],
+        p: float,
+        rand: RandomSource,
+        strict_p: bool,
+        rule_counts: Optional[dict[str, np.ndarray]] = None,
+    ) -> DataFrame:
+        """``apply`` after validation; ``rule_counts`` maps a column to
+        rule-match counts already measured for it."""
+        rule_counts = rule_counts or {}
         out: dict[str, Column] = {}
         if self.group_arity:
             self._validate_group(len(columns))
@@ -168,7 +195,7 @@ class Mutator:
                 eligible = self._eligible(col, r)
                 p_eff = self._strict_rescale(df, eligible, p) if strict_p else p
                 selected = bernoulli_select(r, _SALT_SELECT, p_eff, eligible)
-                out[c] = self._transform_with_frame(df, col, r, selected)
+                out[c] = self._transform_with_frame(df, col, r, selected, rule_counts.get(c))
 
         return df.select(
             *[out[c].alias(c) if c in out else F.col(c) for c in df.columns]
@@ -801,7 +828,143 @@ def with_cldr_keymap_file(
     return _CldrKeymap(load_cldr_candidates(cldr_path, charset))
 
 
-class _ReplacementTable(Mutator):
+# ---------------------------------------------------------------------------
+# Favor-rare rule counts
+# ---------------------------------------------------------------------------
+
+
+def count_rule_matches(
+    df: DataFrame,
+    pairs: Sequence[tuple[Union[str, Column], _FavorRareTable]],
+    caller: str,
+) -> list[np.ndarray]:
+    """Global per-rule match counts for each ``(column, mutator)`` pair,
+    all in ONE Spark job over ``df``.
+
+    The columns are stacked into ``(slot, value)`` rows and grouped by
+    distinct value, so each mutator's ``_rule_matches`` runs once per
+    distinct value of its column, weighted by the value's row count.
+    Every Arrow batch emits one partial count vector and the driver sums
+    them: it holds O(batches × rules) integers, whatever the column
+    cardinality. The job is described as
+    ``gecko:<caller>:rule_frequencies``."""
+    matchers = [mut._rule_matches for _, mut in pairs]
+    bounds = np.cumsum([0] + [len(mut.rules) for _, mut in pairs])
+
+    def _partial_counts(batches):
+        for b in batches:
+            slots = b["slot"].to_numpy()
+            values = b["value"].to_numpy(dtype=object)
+            weights = b["count"].to_numpy(dtype=np.int64)
+            counts = np.zeros(bounds[-1], dtype=np.int64)
+            for s, match in enumerate(matchers):
+                rows = slots == s
+                if rows.any():
+                    hits = match(values[rows]).astype(np.int64)
+                    counts[bounds[s] : bounds[s + 1]] = hits @ weights[rows]
+            yield pd.DataFrame({"counts": [counts]})
+
+    stack_args = []
+    for s, (c, _) in enumerate(pairs):
+        col = F.col(c) if isinstance(c, str) else c
+        stack_args += [F.lit(s), col.cast("string")]
+    partials = (
+        df.select(F.stack(F.lit(len(pairs)), *stack_args).alias("slot", "value"))
+        .groupBy("slot", "value")
+        .count()
+        .mapInPandas(_partial_counts, "counts array<bigint>")
+    )
+    sc = df.sparkSession.sparkContext
+    previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"gecko:{caller}:rule_frequencies")
+    try:
+        rows = partials.collect()
+    finally:
+        sc.setLocalProperty("spark.job.description", previous)
+    total = np.zeros(bounds[-1], dtype=np.int64)
+    for row in rows:
+        total += np.asarray(row["counts"], dtype=np.int64)
+    return [total[lo:hi] for lo, hi in zip(bounds[:-1], bounds[1:])]
+
+
+class _FavorRareTable(Mutator):
+    """A table mutator whose Arrow kernel ``_kernel(col, rand, selected,
+    order)`` applies its ``rules`` in favor-rare ``order`` (rule indices;
+    None = by each batch's own match counts), taken from each rule's
+    match count over the whole column (the reference's two-phase design,
+    gecko/mutator.py:411-478, :592-624; SURVEY §3.3). A global order
+    makes every row's outcome a property of the dataset, not of Arrow
+    batch boundaries — which is what lets the DuckDB oracle replay it
+    exactly.
+
+    Where the order comes from, first match wins: caller-supplied
+    ``rule_frequencies`` (no job; the one way a STREAM gets the global
+    order); a single rule (trivially ordered); counts handed in by
+    ``mutate_data_frame``, which counts all its table steps in one job;
+    otherwise one :func:`count_rule_matches` job over the frame. A
+    streaming frame without ``rule_frequencies`` falls back to the
+    kernel's batch-local order (MIGRATION.md "Streaming")."""
+
+    rules: list
+    rule_frequencies = None
+
+    def _rule_matches(self, values: np.ndarray) -> np.ndarray:
+        """``bool[rules, n]``: which rules match each value. The kernel
+        runs it on the distinct values of its batch and the count on
+        the distinct values of the frame, so the two cannot disagree
+        about what a match is."""
+        raise NotImplementedError
+
+    def _global_order(self) -> bool:
+        return True
+
+    def _order_from(self, counts: Sequence[int]) -> list[int]:
+        """Rules that match at all, most frequent first."""
+        return sorted(
+            (r for r in range(len(self.rules)) if counts[r] > 0),
+            key=lambda r: (-counts[r], r),
+        )
+
+    def _supplied_counts(self) -> Sequence[int]:
+        return self.rule_frequencies
+
+    def _needs_rule_counts(self) -> bool:
+        return self._global_order() and self.rule_frequencies is None and len(self.rules) > 1
+
+    def _frequencies(self, counts: np.ndarray):
+        return [int(c) for c in counts]
+
+    def measure_rule_frequencies(self, df: DataFrame, column):
+        """Per-rule match counts over a static frame, aligned with the
+        table's rules (a ``{source: count}`` dict for the replacement
+        table): the counts behind the global favor-rare order,
+        from the one count job (:func:`count_rule_matches`) that
+        ``apply`` and ``mutate_data_frame`` also run. Feed the result
+        back via ``rule_frequencies`` to (a) skip that job on repeated
+        applications or (b) give a STREAM the dataset-global rule
+        order, which a stream cannot measure itself (a static aggregate
+        over an unbounded input is undefined; MIGRATION.md
+        "Streaming")."""
+        return self._frequencies(count_rule_matches(df, [(column, self)], self.name)[0])
+
+    def _transform(self, col, rand, selected):
+        return self._kernel(col, rand, selected, None)
+
+    def _transform_with_frame(self, df, col, rand, selected, counts=None):
+        if not self._global_order():
+            return self._transform(col, rand, selected)
+        if self.rule_frequencies is not None:
+            counts = self._supplied_counts()
+        elif len(self.rules) == 1:
+            return self._kernel(col, rand, selected, [0])
+        elif counts is None:
+            if df.isStreaming:
+                return self._transform(col, rand, selected)
+            counts = count_rule_matches(df, [(col, self)], self.name)[0]
+        return self._kernel(col, rand, selected, self._order_from(counts))
+
+
+class _ReplacementTable(_FavorRareTable):
     name = "with_replacement_table"
 
     def __init__(
@@ -821,42 +984,43 @@ class _ReplacementTable(Mutator):
         self.targets: dict[str, list[str]] = {}
         for src, tgt in zip(table["source"], table["target"]):
             self.targets.setdefault(src, []).append(tgt)
-        self.sources = list(self.targets)
+        self.rules = list(self.targets)  # the sources
         if rule_frequencies is not None:
-            unknown = set(rule_frequencies) - set(self.sources)
+            unknown = set(rule_frequencies) - set(self.rules)
             if unknown:
                 raise ValueError(
                     f"rule_frequencies keys not in the table's sources: {sorted(unknown)}"
                 )
         self.rule_frequencies = rule_frequencies
 
-    def measure_rule_frequencies(self, df: DataFrame, column: str) -> dict:
-        """Measure per-source match counts over a static frame (one
-        aggregation job) — the same counts the global-order pre-pass
-        derives internally. Feed the result back via the
-        ``rule_frequencies`` parameter to (a) skip the pre-pass job on
-        repeated batch applications or (b) give a STREAM the reference's
-        dataset-global favor-rare rule order, which a stream cannot
-        measure itself (a static aggregate over an unbounded input is
-        undefined — the stream otherwise falls back to batch-local
-        ordering)."""
-        col = F.col(column) if isinstance(column, str) else column
-        aggs = [
-            F.sum(F.when(col.contains(src), 1).otherwise(0)).alias(str(i))
-            for i, src in enumerate(self.sources)
-        ]
-        row = df.select(*aggs).first()
-        return {src: int(row[str(i)] or 0) for i, src in enumerate(self.sources)}
+    def _rule_matches(self, values):
+        # substring match; a null matches nothing
+        return np.array(
+            [[v is not None and src in v for v in values] for src in self.rules],
+            dtype=bool,
+        )
 
-    def _global_order_from(self, freqs: dict) -> list[str]:
-        pairs = sorted((int(freqs.get(src, 0)), src) for src in self.sources)
-        return [src for f, src in pairs if f > 0]
+    def _global_order(self) -> bool:
+        return self.inline and self.order == "global"
+
+    def _order_from(self, counts):
+        # ascending: the rarest source wins (gecko/mutator.py:618-624)
+        return sorted(
+            (r for r in range(len(self.rules)) if counts[r] > 0),
+            key=lambda r: (counts[r], self.rules[r]),
+        )
+
+    def _supplied_counts(self):
+        return [int(self.rule_frequencies.get(src, 0)) for src in self.rules]
+
+    def _frequencies(self, counts):
+        return {src: int(c) for src, c in zip(self.rules, counts)}
 
     def _eligible(self, col, rand):
         if self.inline:
-            alts = "|".join(re.escape(s) for s in self.sources)
+            alts = "|".join(re.escape(s) for s in self.rules)
             return col.rlike(f"(?:{alts})")
-        return col.isin(self.sources)
+        return col.isin(self.rules)
 
     def _transform(self, col, rand, selected):
         if not self.inline:
@@ -872,48 +1036,16 @@ class _ReplacementTable(Mutator):
             pick = rand.uniform_int(1, F.size(tgt_arr))
             mutated = F.element_at(tgt_arr, (pick + F.lit(1)).cast("int"))
             return F.when(selected & tgt_arr.isNotNull(), mutated).otherwise(col)
+        return self._kernel(col, rand, selected, None)
 
-        return self._inline_kernel(col, rand, selected, order=None)
-
-    def _transform_with_frame(self, df, col, rand, selected):
-        if not self.inline or self.order != "global":
-            return self._transform(col, rand, selected)
-        if self.rule_frequencies is not None:
-            # caller supplied the dataset-global counts (typically from
-            # measure_rule_frequencies over historical data) — no
-            # pre-pass job, and the one path that gives a STREAM the
-            # reference's global favor-rare order
-            return self._inline_kernel(
-                col, rand, selected, order=self._global_order_from(self.rule_frequencies)
-            )
-        if df.isStreaming:
-            # a static aggregate over an unbounded stream is undefined;
-            # streams keep the reference-faithful-but-batch-local order
-            # unless rule_frequencies is supplied (see
-            # measure_rule_frequencies / MIGRATION.md "Streaming")
-            return self._transform(col, rand, selected)
-        # ONE aggregation job measures global per-source match counts
-        # over ALL rows — exactly the reference's bitmask counts
-        # (gecko/mutator.py:592-599 marks every matching row before
-        # the :618-624 frequency sort; SURVEY §3.3 steps 1+3). Not
-        # filtering by the selection column keeps the pre-pass free of
-        # per-row hash draws, and makes the output independent of
-        # batch boundaries — which is what lets the driver's DuckDB
-        # oracle replay it exactly.
-        return self._inline_kernel(
-            col,
-            rand,
-            selected,
-            order=self._global_order_from(self.measure_rule_frequencies(df, col)),
-        )
-
-    def _inline_kernel(self, col, rand, selected, order: Optional[list[str]]):
-        """Arrow kernel for inline (substring) replacement. ``order`` is
-        the global ascending-frequency source order; None falls back to
-        batch-local ordering (``order="batch"`` — one pass, no pre-job,
-        but output depends on batch boundaries for rows matching
-        several sources)."""
-        targets = self.targets
+    def _kernel(self, col, rand, selected, order):
+        """Arrow kernel for inline (substring) replacement: each selected
+        row takes the first source in ascending-frequency order that it
+        contains. ``order=None`` (``order="batch"``) ranks sources by
+        their matches among each batch's selected rows — one pass, no
+        count job, but rows matching several sources then depend on
+        batch boundaries."""
+        sources, targets, rule_matches = self.rules, self.targets, self._rule_matches
 
         @F.pandas_udf(T.StringType())
         def _replace(vals: pd.Series, sel: pd.Series, u: pd.Series) -> pd.Series:
@@ -922,28 +1054,23 @@ class _ReplacementTable(Mutator):
             if not mask.any():
                 return out
             filled = vals.fillna("")
+            codes, uniques = pd.factorize(filled)
+            match = rule_matches(np.asarray(uniques, dtype=object))[:, codes] & mask
             if order is None:
-                # batch-local match frequencies, ascending — the
-                # reference's favor-rare ordering at batch granularity
-                freqs = []
-                for src in targets:
-                    m = filled.str.contains(src, regex=False).to_numpy(bool) & mask
-                    if m.any():
-                        freqs.append((int(m.sum()), src))
-                freqs.sort()
-                src_order = [src for _, src in freqs]
+                hits = match.sum(axis=1)
+                src_order = sorted(
+                    (r for r in range(len(sources)) if hits[r]),
+                    key=lambda r: (hits[r], sources[r]),
+                )
             else:
                 src_order = order
             au = u.to_numpy(np.float64)
             mutated = np.zeros(len(filled), dtype=bool)
-            for src in src_order:
-                rows = (
-                    filled.str.contains(src, regex=False).to_numpy(bool)
-                    & mask
-                    & ~mutated
-                )
+            for r in src_order:
+                rows = match[r] & ~mutated
                 if not rows.any():
                     continue
+                src = sources[r]
                 tgts = targets[src]
                 tgt_idx = (au * len(tgts)).astype(np.int64)
                 for j in range(len(tgts)):
@@ -975,16 +1102,17 @@ def with_replacement_table(
     Whole-value mode never leaves the JVM (broadcast map literal +
     seeded pick). Inline mode reproduces the reference's
     ascending-match-frequency first-occurrence semantics
-    (gecko/mutator.py:618-647): ``order="global"`` (default) measures
-    source frequencies with one aggregation job so rule precedence is
-    dataset-wide, deterministic under any partitioning, and exactly
-    oracle-checkable; ``order="batch"`` skips the pre-job and orders
-    within each Arrow batch. ``rule_frequencies`` (a ``{source: count}``
-    mapping, typically from ``Mutator.measure_rule_frequencies`` over
-    historical data) supplies those counts up front — skipping the
-    pre-pass job, and giving a STREAMING frame the same dataset-global
-    rule order as batch (without it, streams fall back to batch-local
-    ordering)."""
+    (gecko/mutator.py:618-647): ``order="global"`` (default) takes the
+    source frequencies from the distinct-value count job — one per
+    ``mutate_data_frame``, shared by all its table steps — so rule
+    precedence is dataset-wide, deterministic under any partitioning,
+    and exactly oracle-checkable; ``order="batch"`` skips the count and
+    orders within each Arrow batch. ``rule_frequencies`` (a
+    ``{source: count}`` mapping, typically from
+    ``measure_rule_frequencies`` over historical data) supplies those
+    counts up front — no count job, and a STREAMING frame gets the same
+    dataset-global rule order as batch (without it, streams fall back
+    to batch-local ordering)."""
     table = load_replacement_table(
         data_source, source_column, target_column, reverse=reverse,
         delimiter=delimiter, encoding=encoding,
@@ -992,7 +1120,19 @@ def with_replacement_table(
     return _ReplacementTable(table, inline, order, rule_frequencies)
 
 
-class _PhoneticReplacement(Mutator):
+def _aligned_frequencies(rule_frequencies, n_rules: int) -> Optional[list[int]]:
+    if rule_frequencies is None:
+        return None
+    counts = [int(c) for c in rule_frequencies]
+    if len(counts) != n_rules:
+        raise ValueError(
+            f"rule_frequencies must align with the {n_rules} table rules "
+            f"(got {len(counts)} counts)"
+        )
+    return counts
+
+
+class _PhoneticReplacement(_FavorRareTable):
     name = "with_phonetic_replacement_table"
 
     def __init__(
@@ -1003,87 +1143,38 @@ class _PhoneticReplacement(Mutator):
         if not rules:
             raise ValueError("must provide at least one phonetic replacement rule")
         self.rules = rules
-        if rule_frequencies is not None:
-            rule_frequencies = [int(c) for c in rule_frequencies]
-            if len(rule_frequencies) != len(rules):
-                raise ValueError(
-                    f"rule_frequencies must align with the {len(rules)} table rules "
-                    f"(got {len(rule_frequencies)} counts)"
-                )
-        self.rule_frequencies = rule_frequencies
+        self.rule_frequencies = _aligned_frequencies(rule_frequencies, len(rules))
 
-    def measure_rule_frequencies(self, df: DataFrame, column) -> list[int]:
-        """Per-rule match counts over a static frame (one aggregation
-        job), aligned with the table's rule order. Feed back via
-        ``rule_frequencies`` to skip the batch pre-pass or to give a
-        stream the dataset-global descending-frequency rule order (see
-        MIGRATION.md \"Streaming\")."""
-        col = F.col(column) if isinstance(column, str) else column
-        aggs = [
-            F.sum(
-                F.when(self._rule_match_cond(col, r), 1).otherwise(0)
-            ).alias(str(i))
-            for i, r in enumerate(self.rules)
-        ]
-        row = df.select(*aggs).first()
-        return [int(row[str(i)] or 0) for i in range(len(self.rules))]
-
-    def _global_order_from(self, counts: Sequence[int]) -> list[int]:
-        return sorted(
-            (r for r in range(len(self.rules)) if counts[r] > 0),
-            key=lambda r: (-counts[r], r),
-        )
+    def _rule_matches(self, values):
+        # flags ^/$ anchor the pattern; a middle rule must sit inside
+        # value[1:-1] (gecko/mutator.py:411-424); a null matches nothing
+        out = np.zeros((len(self.rules), len(values)), dtype=bool)
+        for r, (pattern, _, flag) in enumerate(self.rules):
+            if flag == "^":
+                hit = [v is not None and v.startswith(pattern) for v in values]
+            elif flag == "$":
+                hit = [v is not None and v.endswith(pattern) for v in values]
+            else:
+                hit = [v is not None and pattern in v[1:-1] for v in values]
+            out[r] = hit
+        return out
 
     def _eligible(self, col, rand):
+        # JVM-side replica of _rule_matches: literal string predicates
+        middle = col.substr(F.lit(2), F.greatest(F.length(col) - F.lit(2), F.lit(0)))
         conds = None
-        for rule in self.rules:
-            c = self._rule_match_cond(col, rule)
+        for pattern, _, flag in self.rules:
+            if flag == "^":
+                c = col.startswith(pattern)
+            elif flag == "$":
+                c = col.endswith(pattern)
+            else:
+                c = middle.contains(pattern)
             conds = c if conds is None else (conds | c)
         return conds
 
-    def _rule_match_cond(self, col, rule) -> Column:
-        """JVM-side exact replica of the kernel's per-rule match mask —
-        literal string predicates, not regexes (a regex per rule per
-        row made the global-order pre-pass the most expensive stage of
-        the whole mutator at 1M rows)."""
-        pattern, _, flag = rule
-        if flag == "^":
-            return col.startswith(pattern)
-        if flag == "$":
-            return col.endswith(pattern)
-        # middle: contained in value[1:-1] (gecko/mutator.py:422)
-        return col.substr(
-            F.lit(2), F.greatest(F.length(col) - F.lit(2), F.lit(0))
-        ).contains(pattern)
-
-    def _transform_with_frame(self, df, col, rand, selected):
-        if self.rule_frequencies is not None:
-            # caller-supplied dataset-global counts: no pre-pass job,
-            # and the one path that gives a STREAM the reference's
-            # global descending-frequency rule order
-            return self._kernel(
-                col, rand, selected, self._global_order_from(self.rule_frequencies)
-            )
-        if df.isStreaming:
-            # batch-local rule order (a static aggregate over an
-            # unbounded stream is undefined) — supply rule_frequencies
-            # for global-order parity (MIGRATION.md "Streaming")
-            return self._transform(col, rand, selected)
-        if len(self.rules) == 1:
-            return self._kernel(col, rand, selected, [0])
-        # ONE aggregation job: global per-rule match counts over ALL
-        # rows (the reference's bitmask counts, gecko/mutator.py:
-        # 411-424 + 443-449). The descending-frequency rule order (and
-        # with it each row's accept/skip draw sequence) becomes a
-        # property of the dataset, not of Arrow batch boundaries.
-        counts = self.measure_rule_frequencies(df, col)
-        return self._kernel(col, rand, selected, self._global_order_from(counts))
-
-    def _transform(self, col, rand, selected):
-        return self._kernel(col, rand, selected, None)
-
     def _kernel(self, col, rand, selected, global_order):
-        rules = self.rules
+        rules, rule_matches = self.rules, self._rule_matches
 
         @F.pandas_udf(T.StringType())
         def _phonetic(vals: pd.Series, sel: pd.Series, u: pd.Series) -> pd.Series:
@@ -1096,37 +1187,21 @@ class _PhoneticReplacement(Mutator):
             # FACTORIZE the batch (round 15, guide §4): match masks and
             # replacement strings are pure functions of the VALUE, and
             # mutator columns are typically low-cardinality (generated
-            # categories, names, dates), so the per-rule .str kernels
-            # and regex replaces run over the batch's distinct values
-            # and fan back out through one integer gather — measured
-            # ~10× on the masks at 10 distinct values, and a no-op-cost
-            # hash pass when every value is distinct. Row-level
-            # accept/skip draws below are untouched, so outputs are
-            # bit-identical.
+            # categories, names, dates), so the rule matches and regex
+            # replaces run over the batch's distinct values and fan back
+            # out through one integer gather. Row-level accept/skip
+            # draws below are untouched, so outputs are bit-identical.
             codes, uniques = pd.factorize(vals.fillna(""))
             uniq_np = np.asarray(uniques, dtype=object)
             su = pd.Series(uniq_np)
-
-            # per-rule match masks over the DISTINCT values
-            # (gecko/mutator.py:411-424)
-            matchu = np.zeros((len(rules), len(su)), dtype=bool)
-            for r, (pattern, _, flag) in enumerate(rules):
-                if flag == "^":
-                    matchu[r] = su.str.startswith(pattern).to_numpy(bool)
-                elif flag == "$":
-                    matchu[r] = su.str.endswith(pattern).to_numpy(bool)
-                else:
-                    matchu[r] = (
-                        su.str.slice(1, -1).str.contains(pattern, regex=False)
-                        .to_numpy(bool)
-                    )
+            matchu = rule_matches(uniq_np)
             match = matchu[:, codes]
 
             options = match.sum(axis=0).astype(np.float64)
             # rule order: descending frequency; rows keep an
             # inverse-options acceptance chance with decrementing
             # counters so rare rules win (gecko/mutator.py:443-478).
-            # A global order (from the pre-pass) keeps every row's
+            # A global order (from the count job) keeps every row's
             # draw sequence batch-invariant; the batch-local fallback
             # serves streams.
             if global_order is not None:
@@ -1189,12 +1264,13 @@ def with_phonetic_replacement_table(
 ) -> Mutator:
     """Phonetic errors from a (source, target, flags) table; flags ^/_/$
     restrict match position (gecko/mutator.py:314-507). One Arrow kernel
-    reproduces the descending-frequency inverse-option rule assignment
-    per batch. ``rule_frequencies`` (per-rule match counts aligned with
-    the table rows, typically from ``measure_rule_frequencies`` over
-    historical data) supplies the global rule order up front — skipping
-    the batch pre-pass job and giving STREAMS batch-identical global
-    ordering."""
+    reproduces the descending-frequency inverse-option rule assignment,
+    in the global rule order from the distinct-value count job (one per
+    ``mutate_data_frame``, shared by all its table steps).
+    ``rule_frequencies`` (per-rule match counts aligned with the table
+    rows, typically from ``measure_rule_frequencies`` over historical
+    data) supplies that order up front — no count job, and STREAMS get
+    batch-identical global ordering."""
     rules = load_phonetic_table(
         data_source, source_column, target_column, flags_column,
         delimiter=delimiter, encoding=encoding,
@@ -1202,7 +1278,7 @@ def with_phonetic_replacement_table(
     return _PhoneticReplacement(rules, rule_frequencies)
 
 
-class _RegexReplacement(Mutator):
+class _RegexReplacement(_FavorRareTable):
     name = "with_regex_replacement_table"
 
     def __init__(
@@ -1213,98 +1289,19 @@ class _RegexReplacement(Mutator):
         if not rules:
             raise ValueError("must provide at least one regex replacement rule")
         self.rules = rules
-        if rule_frequencies is not None:
-            rule_frequencies = [int(c) for c in rule_frequencies]
-            if len(rule_frequencies) != len(rules):
-                raise ValueError(
-                    f"rule_frequencies must align with the {len(rules)} table rules "
-                    f"(got {len(rule_frequencies)} counts)"
-                )
-        self.rule_frequencies = rule_frequencies
+        self.rule_frequencies = _aligned_frequencies(rule_frequencies, len(rules))
 
-    def measure_rule_frequencies(self, df: DataFrame, column) -> list[int]:
-        """Per-rule match counts over a static frame, aligned with the
-        table's rule order. Python regex semantics differ from Java's,
-        so the count pass is an Arrow kernel (one scan). Feed back via
-        ``rule_frequencies`` to skip this pre-pass or to give a stream
-        the dataset-global rule order (MIGRATION.md \"Streaming\")."""
-        col = F.col(column) if isinstance(column, str) else column
-        rules = self.rules
-
-        if len(rules) <= 62:
-            # pack per-rule flags into ONE long per row (round 15): the
-            # old per-row list-of-longs built len(rules) boxed ints per
-            # row before Arrow even saw them; the bitmask is a single
-            # int64 column, and the searches run once per DISTINCT
-            # value (same factorize rationale as the kernel).
-            @F.pandas_udf(T.LongType())
-            def _match_bits(vals: pd.Series) -> pd.Series:
-                codes, uniques = pd.factorize(vals.fillna(""))
-                uniq_np = np.asarray(uniques, dtype=object)
-                bits_u = np.zeros(len(uniq_np), dtype=np.int64)
-                for r, (p, _) in enumerate(rules):
-                    m = np.array(
-                        [p.search(v) is not None for v in uniq_np], dtype=bool
-                    )
-                    bits_u |= m.astype(np.int64) << r
-                return pd.Series(bits_u[codes])
-
-            bits = df.select(_match_bits(col).alias("c"))
-            row = bits.groupBy().agg(
-                *[
-                    F.sum(F.shiftright("c", i).bitwiseAND(F.lit(1))).alias(str(i))
-                    for i in range(len(rules))
-                ]
-            ).first()
-            return [int(row[str(i)] or 0) for i in range(len(rules))]
-
-        @F.pandas_udf(T.ArrayType(T.LongType()))
-        def _match_flags(vals: pd.Series) -> pd.Series:
-            vals_np = vals.fillna("").to_numpy(dtype=object)
-            out = [
-                [1 if p.search(v) is not None else 0 for p, _ in rules]
-                for v in vals_np
-            ]
-            return pd.Series(out)
-
-        row = (
-            df.select(_match_flags(col).alias("c"))
-            .select(
-                *[F.element_at("c", i + 1).alias(str(i)) for i in range(len(rules))]
-            )
-            .groupBy()
-            .agg(*[F.sum(str(i)).alias(str(i)) for i in range(len(rules))])
-            .first()
-        )
-        return [int(row[str(i)] or 0) for i in range(len(rules))]
-
-    def _global_order_from(self, counts: Sequence[int]) -> list[int]:
-        return sorted(
-            (r for r in range(len(self.rules)) if counts[r] > 0),
-            key=lambda r: (-counts[r], r),
-        )
-
-    def _transform_with_frame(self, df, col, rand, selected):
-        if self.rule_frequencies is not None:
-            return self._kernel(
-                col, rand, selected, self._global_order_from(self.rule_frequencies)
-            )
-        if df.isStreaming or len(self.rules) == 1:
-            # one rule: order is trivially global already; streams fall
-            # back to batch-local order unless rule_frequencies is
-            # supplied (MIGRATION.md "Streaming")
-            return self._kernel(col, rand, selected, None if len(self.rules) > 1 else [0])
-        # Global per-rule match counts over ALL rows (the reference's
-        # bitmask counts) — one extra Arrow-kernel scan, the price of
-        # the reference's two-phase favor-rare design (SURVEY §3.3).
-        counts = self.measure_rule_frequencies(df, col)
-        return self._kernel(col, rand, selected, self._global_order_from(counts))
-
-    def _transform(self, col, rand, selected):
-        return self._kernel(col, rand, selected, None)
+    def _rule_matches(self, values):
+        # Python regex semantics (Java's differ); a null is searched as
+        # "", like the kernel's fillna("")
+        texts = ["" if v is None else v for v in values]
+        out = np.zeros((len(self.rules), len(texts)), dtype=bool)
+        for r, (pattern, _) in enumerate(self.rules):
+            out[r] = [pattern.search(v) is not None for v in texts]
+        return out
 
     def _kernel(self, col, rand, selected, global_order):
-        rules = self.rules
+        rules, rule_matches = self.rules, self._rule_matches
 
         def _apply_rule(value: str, pattern: re.Pattern, subs: dict[str, str]) -> str:
             m = pattern.search(value)
@@ -1357,12 +1354,7 @@ class _RegexReplacement(Mutator):
             codes, uniques = pd.factorize(vals.fillna(""))
             uniq_np = np.asarray(uniques, dtype=object)
             n = len(vals)
-            matchu = np.zeros((len(rules), len(uniq_np)), dtype=bool)
-            for r, (pattern, _) in enumerate(rules):
-                matchu[r] = np.array(
-                    [pattern.search(v) is not None for v in uniq_np]
-                )
-            match = matchu[:, codes]
+            match = rule_matches(uniq_np)[:, codes]
             options = match.sum(axis=0).astype(np.float64)
             if global_order is not None:
                 freq_order = global_order
@@ -1408,10 +1400,12 @@ def with_regex_replacement_table(
     capture group supplying replacement text, with cross-group
     references (gecko/mutator.py:1444-1590). Spark's regexp_replace
     cannot express table-driven group splicing, so this ships the
-    replacement logic in one Arrow kernel. ``rule_frequencies``
-    (per-rule match counts aligned with table rows, from
-    ``measure_rule_frequencies`` over historical data) skips the count
-    pre-pass and gives STREAMS the dataset-global rule order."""
+    replacement logic in one Arrow kernel, in the global rule order from
+    the distinct-value count job (one per ``mutate_data_frame``, shared
+    by all its table steps). ``rule_frequencies`` (per-rule match counts
+    aligned with table rows, from ``measure_rule_frequencies`` over
+    historical data) skips the count job and gives STREAMS the
+    dataset-global rule order."""
     rules = load_regex_table(
         data_source, pattern_column, flags_column, delimiter=delimiter, encoding=encoding
     )

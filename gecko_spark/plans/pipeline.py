@@ -13,6 +13,16 @@ entries applied sequentially. Each step is a ``DataFrame -> DataFrame``
 fold; Catalyst collapses the chained when/otherwise projections, so an
 entire corruption pipeline typically executes as one stage plus one
 Arrow-UDF stage per table-driven mutator.
+
+The favor-rare table mutators (inline replacement, phonetic and regex
+tables) order their rules by global match counts, the one eager part of
+the chain. Before building it, ``mutate_data_frame`` counts every such
+step whose column no earlier step writes in ONE distinct-value job over
+the input (``count_rule_matches``, described as
+``gecko:mutate_data_frame:rule_frequencies``). A step that reads a
+column an earlier step wrote counts the mutated column in its own job,
+as the reference does; caller-supplied ``rule_frequencies`` and
+streaming input need no job.
 """
 
 from __future__ import annotations
@@ -24,7 +34,7 @@ from pyspark.sql import functions as F
 
 from gecko_spark.core import HashRandom, RandomSource, check_probability
 from gecko_spark.operators.generators import ColumnGenerator, GenContext
-from gecko_spark.operators.mutators import Mutator
+from gecko_spark.operators.mutators import Mutator, count_rule_matches
 
 __all__ = ["to_data_frame", "mutate_data_frame", "IDX_COLUMN"]
 
@@ -153,27 +163,54 @@ def mutate_data_frame(
         strict_p: reproduce the reference's eligibility measurement,
             p-rescaling and GeckoWarning (one aggregation job per step).
     """
-    df_out = df_in
-    step = 0
+    steps = []  # (step index, columns, p, mutator), in application order
     for column_spec, mutator_spec in mutator_lst:
         if isinstance(column_spec, str):
             column_spec = (column_spec,)
         for c in column_spec:
-            if c not in df_out.columns:
+            if c not in df_in.columns:
                 raise ValueError(
                     f"column `{c}` does not exist, must be one of `{','.join(df_in.columns)}`"
                 )
-        weighted = _normalize_mutator_spec(mutator_spec)
-        for p, mut in weighted:
+        for p, mut in _normalize_mutator_spec(mutator_spec):
             if p <= 0 or p > 1:
                 raise ValueError("probability for mutator must be in range of (0, 1]")
-            if rand_for is not None:
-                rand = rand_for(step)
-            else:
-                keys = list(key_columns) if key_columns else list(df_out.columns)
-                rand = HashRandom(seed, [F.col(k) for k in keys]).fork(step)
-            df_out = mut.apply(
-                df_out, list(column_spec), p, rand=rand, strict_p=strict_p
-            )
-            step += 1
+            steps.append((len(steps), list(column_spec), p, mut))
+
+    counted = not df_in.isStreaming  # streams keep batch-local rule order
+    # (step, column) pairs whose column no earlier step writes: their
+    # counts over df_in equal those over the chain so far, so all of
+    # them come from one job
+    fused, written = [], set()
+    for step, columns, _, mut in steps:
+        if counted and mut._needs_rule_counts():
+            fused += [(step, c, mut) for c in columns if c not in written]
+        written.update(columns)
+    counts = _rule_counts(df_in, fused)
+
+    df_out = df_in
+    for step, columns, p, mut in steps:
+        if rand_for is not None:
+            rand = rand_for(step)
+        else:
+            keys = list(key_columns) if key_columns else list(df_out.columns)
+            rand = HashRandom(seed, [F.col(k) for k in keys]).fork(step)
+        if counted and mut._needs_rule_counts():
+            # columns an earlier step wrote: the reference counts the
+            # mutated column, so count it over the chain so far
+            late = [(step, c, mut) for c in columns if (step, c) not in counts]
+            counts |= _rule_counts(df_out, late)
+        step_counts = {c: counts[(step, c)] for c in columns if (step, c) in counts}
+        df_out = mut._apply(df_out, columns, p, rand, strict_p, step_counts)
     return df_out
+
+
+def _rule_counts(df: DataFrame, entries: list) -> dict:
+    """Rule-match counts over ``df`` for ``(step, column, mutator)``
+    entries in one job, keyed by ``(step, column)``; no job when empty."""
+    if not entries:
+        return {}
+    vectors = count_rule_matches(
+        df, [(c, mut) for _, c, mut in entries], "mutate_data_frame"
+    )
+    return {(step, c): v for (step, c, _), v in zip(entries, vectors)}

@@ -246,3 +246,19 @@ def test_from_group_rounding_adjustment_warns():
     with warnings.catch_warnings():
         warnings.simplefilter("error")  # zero (default): no warning
         from_group(gens, max_rounding_adjustment=0)
+
+
+def test_driver_memory_follows_physical_memory(monkeypatch):
+    """get_spark's default driver heap is half of physical memory in
+    whole GiB, within [1g, 16g]; GECKO_SPARK_DRIVER_MEM overrides it."""
+    from gecko_spark.core import driver_memory
+
+    monkeypatch.delenv("GECKO_SPARK_DRIVER_MEM", raising=False)
+    gib = 2**30
+    assert driver_memory(15 * gib) == "7g"
+    assert driver_memory(16 * gib) == "8g"
+    assert driver_memory(1 * gib) == "1g"
+    assert driver_memory(256 * gib) == "16g"
+    assert 1 <= int(driver_memory()[:-1]) <= 16
+    monkeypatch.setenv("GECKO_SPARK_DRIVER_MEM", "3g")
+    assert driver_memory(256 * gib) == "3g"

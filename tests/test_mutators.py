@@ -4,10 +4,16 @@ the favor-rare / exclusivity semantics — the reference's test shape
 
 from __future__ import annotations
 
+import random
+import re
+
+import numpy as np
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from gecko_spark import GeckoWarning
+from gecko_spark.core import HashRandom
 from gecko_spark.operators import generators as G
 from gecko_spark.operators import mutators as M
 from gecko_spark.plans.pipeline import mutate_data_frame, to_data_frame
@@ -601,3 +607,194 @@ def test_case_mutators_exact_eligibility_strict_p(spark):
     a = _mutate(smix, [("v", (0.5, M.with_lowercase()))]).toPandas()["v"]
     b = _mutate(smix, [("v", (0.5, M.with_lowercase(exact_eligibility=True)))]).toPandas()["v"]
     assert (a == b).all()
+
+
+# -- favor-rare rule counts --------------------------------------------------
+
+# nulls, empty strings, non-ASCII and repeated values in one column
+_COUNT_VALUES = [
+    None, "", "a", "ab", "abc", "Müller", "über", "straße", "ßab", "schasx",
+    "rasch", "schade", "x", "2020-01-02", "03/04/2021", "日本語", "ab ab", "s",
+] * 3 + [None, "", "Müller"]
+
+
+def _values_df(values):
+    return spark_from_pandas(pd.DataFrame({"v": pd.Series(values, dtype=object)}))
+
+
+def test_inline_rule_counts_match_python(spark):
+    sources = ["ab", "", "ü", "ß", "x", "zz"]  # "" is the empty inline source
+    tbl = pd.DataFrame({"s": sources, "t": ["T"] * len(sources)})
+    mut = M.with_replacement_table(tbl, "s", "t", inline=True)
+    # a null never matches, not even the empty source
+    expected = {src: sum(v is not None and src in v for v in _COUNT_VALUES) for src in sources}
+    assert mut.measure_rule_frequencies(_values_df(_COUNT_VALUES), "v") == expected
+
+
+def test_phonetic_rule_counts_match_python(spark):
+    tbl = pd.DataFrame(
+        {"s": ["sch", "as", "ü", "b", "ß", ""], "t": ["sh", "az", "ue", "p", "ss", "e"],
+         "f": ["^", "_", "", "$", "_", "^"]}
+    )
+    mut = M.with_phonetic_replacement_table(tbl, "s", "t", "f")
+    rules = [("sch", "^"), ("as", "_")] + [("ü", f) for f in "^_$"]
+    rules += [("b", "$"), ("ß", "_"), ("", "^")]
+
+    def hit(v, pattern, flag):
+        if v is None:
+            return False  # a null never matches
+        if flag == "^":
+            return v.startswith(pattern)
+        if flag == "$":
+            return v.endswith(pattern)
+        return pattern in v[1:-1]
+
+    expected = [sum(hit(v, p, f) for v in _COUNT_VALUES) for p, f in rules]
+    assert mut.measure_rule_frequencies(_values_df(_COUNT_VALUES), "v") == expected
+
+
+@pytest.mark.parametrize("n_rules", [4, 70])
+def test_regex_rule_counts_match_python(spark, n_rules):
+    patterns = [r"(?P<g>\d{2})/", "", r"(?P<g>ü)", r"^(?P<g>a)b?"]
+    patterns += [f"(?P<g>{i:02d})" for i in range(n_rules - len(patterns))]
+    tbl = pd.DataFrame({"pattern": patterns, "g": ["X"] * n_rules})
+    mut = M.with_regex_replacement_table(tbl, pattern_column="pattern")
+    rng = random.Random(n_rules)
+    values = _COUNT_VALUES + [
+        "".join(rng.choice("0123456789") for _ in range(rng.randint(0, 6))) for _ in range(300)
+    ]
+    # a null is searched as "", so the empty pattern counts it
+    expected = [
+        sum(re.search(p, "" if v is None else v) is not None for v in values) for p in patterns
+    ]
+    assert mut.measure_rule_frequencies(_values_df(values), "v") == expected
+
+
+def test_rule_count_job_is_labelled_and_restores_description(spark):
+    """The count job runs as ``gecko:<mutator>:rule_frequencies`` and the
+    caller's job description comes back afterwards, also when the job
+    fails."""
+    from pyspark import TaskContext
+
+    sc = spark.sparkContext
+    label = "gecko:with_regex_replacement_table:rule_frequencies"
+    mut = M.with_regex_replacement_table(
+        pd.DataFrame({"pattern": ["a", "b"]}), pattern_column="pattern"
+    )
+
+    def seen_label(values):  # rule 0: the task ran under the label
+        desc = TaskContext.get().getLocalProperty("spark.job.description")
+        return np.array([[desc == label] * len(values), [True] * len(values)])
+
+    mut._rule_matches = seen_label
+    sdf = spark.createDataFrame([("a",), ("b",), ("c",)], "v string")
+    failing = sdf.select(F.raise_error(F.lit("boom")).cast("string").alias("v"))
+    sc.setJobDescription("caller")
+    try:
+        assert mut.measure_rule_frequencies(sdf, "v") == [3, 3]
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        with pytest.raises(Exception, match="boom"):
+            mut.measure_rule_frequencies(failing, "v")
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+    assert sc.getLocalProperty("spark.job.description") is None
+
+
+# -- mutate_data_frame: one count job -----------------------------------------
+
+
+def _tables():
+    ocr = M.with_replacement_table(
+        pd.DataFrame({"s": ["ab", "bc", "c"], "t": ["X", "Y", "Z"]}), "s", "t", inline=True
+    )
+    phonetic = M.with_phonetic_replacement_table(
+        pd.DataFrame({"s": ["sch", "as"], "t": ["sh", "az"], "f": ["^", "_"]}), "s", "t", "f"
+    )
+    regex = M.with_regex_replacement_table(
+        pd.DataFrame({"pattern": [r"(?P<d>\d)", r"(?P<c>c)"], "d": ["9", ""], "c": ["", "k"]}),
+        pattern_column="pattern",
+    )
+    return ocr, phonetic, regex
+
+
+def _rows(df):
+    return [tuple(r) for r in df.orderBy("__idx__").collect()]
+
+
+def test_pipeline_counts_a_written_column_over_the_mutated_frame(spark):
+    """A table step reading a column an earlier step wrote orders its
+    rules by counts over the MUTATED column, as applying the steps one
+    at a time does. The first step turns every "rasch" into "schol",
+    which flips the phonetic rule order for the "schasx" rows (over the
+    input the middle rule "as" is more frequent, after it "^sch")."""
+    data = pd.DataFrame({"v": ["schasx"] * 200 + ["rasch"] * 300 + ["schade"] * 200})
+    sdf = spark_from_pandas(data)
+    rewrite = M.with_replacement_table(pd.DataFrame({"s": ["rasch"], "t": ["schol"]}), "s", "t")
+    _, phonetic, _ = _tables()
+    spec = [("v", (1.0, rewrite)), ("v", (0.9, phonetic))]
+    out = mutate_data_frame(sdf, spec, seed=5, key_columns=["__idx__"])
+
+    rand = HashRandom(5, [F.col("__idx__")])
+    one = rewrite.apply(sdf, ["v"], 1.0, rand=rand.fork(0))
+    two = phonetic.apply(one, ["v"], 0.9, rand=rand.fork(1))
+    assert _rows(out) == _rows(two)
+    # over the input the order is ["as", "^sch"], after step 1 the reverse
+    assert phonetic.measure_rule_frequencies(sdf, "v") == [400, 500]
+    assert phonetic.measure_rule_frequencies(one, "v") == [700, 200]
+
+
+def test_pipeline_counts_each_column_of_a_multi_column_step(spark):
+    """Each column of a multi-column table step gets its own counts: the
+    rarer source wins, and it is "bc" in v but "ab" in w."""
+    v = ["ab"] * 30 + ["abc"] * 10 + ["bc"] * 5
+    w = ["bc"] * 30 + ["abc"] * 10 + ["ab"] * 5
+    sdf = spark_from_pandas(pd.DataFrame({"v": v, "w": w}))
+    tbl = pd.DataFrame({"s": ["ab", "bc"], "t": ["X", "Y"]})
+    mut = M.with_replacement_table(tbl, "s", "t", inline=True)
+    out = mutate_data_frame(sdf, [(("v", "w"), mut)], seed=3, key_columns=["__idx__"])
+    got = out.toPandas().sort_values("__idx__").reset_index(drop=True)
+    assert (got["v"].iloc[30:40] == "aY").all()
+    assert (got["w"].iloc[30:40] == "Xc").all()
+    rand = HashRandom(3, [F.col("__idx__")])
+    assert _rows(out) == _rows(mut.apply(sdf, ["v", "w"], 1.0, rand=rand.fork(0)))
+
+
+def test_pipeline_output_is_partitioning_independent(spark):
+    rng = random.Random(7)
+    pool = ["schasx", "rasch", "abc", "bc", "c7", "x1c", "", None, "Müller", "schade"]
+    data = pd.DataFrame({"a": [rng.choice(pool) for _ in range(600)]})
+    data["b"] = data["a"].sample(frac=1.0, random_state=1).to_numpy()
+    data["c"] = data["a"].sample(frac=1.0, random_state=2).to_numpy()
+    sdf = spark_from_pandas(data)
+    ocr, phonetic, regex = _tables()
+    spec = [("a", (0.7, ocr)), ("b", (0.7, phonetic)), ("c", (0.7, regex)), ("a", (0.5, regex))]
+    outs = [
+        _rows(mutate_data_frame(sdf.repartition(n), spec, seed=11, key_columns=["__idx__"]))
+        for n in (1, 7)
+    ]
+    assert outs[0] == outs[1]
+
+
+def test_pipeline_runs_one_count_job_for_its_table_steps(spark):
+    """Three table steps on unwritten columns: one count job (its
+    shuffle may add an adaptive-execution job) while the plan is built,
+    none per step."""
+    data = pd.DataFrame({"a": ["abc", "schasx", "c1"] * 100})
+    data["b"], data["c"] = data["a"], data["a"]
+    sdf = spark_from_pandas(data).cache()
+    sdf.count()
+    ocr, phonetic, regex = _tables()
+    spec = [("a", (0.5, ocr)), ("b", (0.5, phonetic)), ("c", (0.5, regex))]
+    sc = spark.sparkContext
+    sc.setJobGroup("gecko-one-count-job", "mutate_data_frame", False)
+    try:
+        out = mutate_data_frame(sdf, spec, seed=1, key_columns=["__idx__"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup("gecko-one-count-job")
+    assert 1 <= len(jobs) <= 2, jobs
+    assert out.count() == 300
+    sdf.unpersist()
