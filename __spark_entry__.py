@@ -2594,9 +2594,9 @@ def _mut_replacement_inline(spark, sf):
 
 
 def _mut_replacement_inline_sql() -> str:
-    """Exact oracle for inline replacement with order="global": the
-    per-source frequencies (over ALL rows, like the reference's
-    bitmask counts) are a SQL aggregate, a row's claiming source is
+    """Exact oracle for inline replacement: the per-source frequencies
+    (over ALL rows, like the reference's bitmask counts) are a SQL
+    aggregate, a row's claiming source is
     the ascending (frequency, source) minimum over its matches —
     exactly the kernel's loop — and the replacement splices at the
     first occurrence. The OCR table maps every source to exactly one

@@ -23,7 +23,8 @@ distinct salts.
 from __future__ import annotations
 
 import os
-from typing import Iterable, Sequence, Union
+from contextlib import contextmanager
+from typing import Iterable, Iterator, Sequence, Union
 
 from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
@@ -99,6 +100,21 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def job_description(spark: SparkSession, description: str) -> Iterator[None]:
+    """Run the enclosed Spark jobs under ``description`` (the
+    ``spark.job.description`` local property, ``gecko:<entry>:<purpose>``
+    for jobs the library starts itself); the caller's description comes
+    back afterwards, also when a job fails."""
+    sc = spark.sparkContext
+    previous = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(description)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.job.description", previous)
 
 
 # ---------------------------------------------------------------------------

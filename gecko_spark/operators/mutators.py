@@ -22,7 +22,9 @@ pure functions, all randomness is derived JVM-side (core.py policy), so
 results are partitioning-independent. Three of them (inline
 replacement, phonetic and regex tables) order their rules by global
 match counts, measured by one distinct-value job
-(:func:`count_rule_matches`).
+(:func:`count_rule_matches`). Only ``Mutator.apply``,
+``measure_rule_frequencies`` and ``mutate_data_frame`` start that job;
+building a kernel never runs a Spark job.
 """
 
 from __future__ import annotations
@@ -42,6 +44,7 @@ from gecko_spark.core import (
     RandomSource,
     bernoulli_select,
     check_probability,
+    job_description,
 )
 from gecko_spark.functions.datetime_patterns import strftime_to_spark
 from gecko_spark.functions.strings import (
@@ -110,22 +113,10 @@ class Mutator:
     def _transform(self, col: Column, rand: RandomSource, selected: Column) -> Column:
         return F.when(selected, self._mutate(col, rand)).otherwise(col)
 
-    def _transform_with_frame(
-        self,
-        df: DataFrame,
-        col: Column,
-        rand: RandomSource,
-        selected: Column,
-        counts: Optional[np.ndarray] = None,
-    ) -> Column:
-        """Hook for mutators that need a pre-pass over the input frame
-        (global rule-match counts; ``counts`` hands in ones already
-        measured). Default: no pre-pass."""
-        return self._transform(col, rand, selected)
-
     def _needs_rule_counts(self) -> bool:
-        """True when ``_transform_with_frame`` would count rule matches
-        over the frame unless ``counts`` are handed in."""
+        """True when callers should measure this mutator's rule-match
+        counts (:func:`count_rule_matches`) and hand them to
+        ``_transform``."""
         return False
 
     # -- group hooks ---------------------------------------------------------
@@ -165,7 +156,13 @@ class Mutator:
             # hold constant values, which would make every row share one
             # draw (all-or-nothing selection)
             rand = HashRandom(seed, [F.col(c) for c in df.columns])
-        return self._apply(df, columns, p, rand, strict_p)
+        counts = {}
+        if self._needs_rule_counts() and not df.isStreaming:
+            # every column in one job; a stream cannot be counted, so its
+            # kernels order the rules per batch
+            pairs = [(c, self) for c in columns]
+            counts = dict(zip(columns, count_rule_matches(df, pairs, self.name)))
+        return self._apply(df, columns, p, rand, strict_p, counts)
 
     def _apply(
         self,
@@ -195,7 +192,10 @@ class Mutator:
                 eligible = self._eligible(col, r)
                 p_eff = self._strict_rescale(df, eligible, p) if strict_p else p
                 selected = bernoulli_select(r, _SALT_SELECT, p_eff, eligible)
-                out[c] = self._transform_with_frame(df, col, r, selected, rule_counts.get(c))
+                if c in rule_counts:
+                    out[c] = self._transform(col, r, selected, rule_counts[c])
+                else:
+                    out[c] = self._transform(col, r, selected)
 
         return df.select(
             *[out[c].alias(c) if c in out else F.col(c) for c in df.columns]
@@ -212,7 +212,8 @@ class Mutator:
 
         if eligible is None:
             return p
-        row = df.select(F.avg(eligible.cast("double")).alias("pa")).first()
+        with job_description(df.sparkSession, f"gecko:{self.name}:strict_p"):
+            row = df.select(F.avg(eligible.cast("double")).alias("pa")).first()
         p_actual = row["pa"] or 0.0
         if p_actual < p:
             warnings.warn(
@@ -874,13 +875,8 @@ def count_rule_matches(
         .count()
         .mapInPandas(_partial_counts, "counts array<bigint>")
     )
-    sc = df.sparkSession.sparkContext
-    previous = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(f"gecko:{caller}:rule_frequencies")
-    try:
+    with job_description(df.sparkSession, f"gecko:{caller}:rule_frequencies"):
         rows = partials.collect()
-    finally:
-        sc.setLocalProperty("spark.job.description", previous)
     total = np.zeros(bounds[-1], dtype=np.int64)
     for row in rows:
         total += np.asarray(row["counts"], dtype=np.int64)
@@ -888,22 +884,26 @@ def count_rule_matches(
 
 
 class _FavorRareTable(Mutator):
-    """A table mutator whose Arrow kernel ``_kernel(col, rand, selected,
-    order)`` applies its ``rules`` in favor-rare ``order`` (rule indices;
-    None = by each batch's own match counts), taken from each rule's
-    match count over the whole column (the reference's two-phase design,
-    gecko/mutator.py:411-478, :592-624; SURVEY §3.3). A global order
-    makes every row's outcome a property of the dataset, not of Arrow
-    batch boundaries — which is what lets the DuckDB oracle replay it
-    exactly.
+    """A table mutator that applies its ``rules`` in favor-rare order,
+    taken from each rule's match count over the whole column (the
+    reference's two-phase design, gecko/mutator.py:411-478, :592-624;
+    SURVEY §3.3). A global order makes every row's outcome a property
+    of the dataset, not of Arrow batch boundaries — which is what lets
+    the DuckDB oracle replay it exactly.
 
-    Where the order comes from, first match wins: caller-supplied
-    ``rule_frequencies`` (no job; the one way a STREAM gets the global
-    order); a single rule (trivially ordered); counts handed in by
-    ``mutate_data_frame``, which counts all its table steps in one job;
-    otherwise one :func:`count_rule_matches` job over the frame. A
-    streaming frame without ``rule_frequencies`` falls back to the
-    kernel's batch-local order (MIGRATION.md "Streaming")."""
+    The mutator never counts by itself. ``_transform`` takes the
+    caller-supplied ``rule_frequencies`` if there are any, else the
+    counts its caller handed in (``apply`` and ``mutate_data_frame``
+    measure them with :func:`count_rule_matches`), else each Arrow
+    batch's own counts: the fallback of a stream without
+    ``rule_frequencies`` (MIGRATION.md "Streaming") and of a table
+    inside ``with_group``.
+
+    ``_kernel`` is the inverse-option rule assignment of the phonetic
+    and regex tables (gecko/mutator.py:443-478): rules go most frequent
+    first, and a row that still has ``k`` matching rules left accepts
+    the current one with chance 1/k, so rare rules win. A subclass
+    supplies ``_rewrite``."""
 
     rules: list
     rule_frequencies = None
@@ -915,8 +915,10 @@ class _FavorRareTable(Mutator):
         about what a match is."""
         raise NotImplementedError
 
-    def _global_order(self) -> bool:
-        return True
+    def _rewrite(self, values: np.ndarray, rule) -> np.ndarray:
+        """``rule`` applied to each of the distinct ``values`` it
+        matches."""
+        raise NotImplementedError
 
     def _order_from(self, counts: Sequence[int]) -> list[int]:
         """Rules that match at all, most frequent first."""
@@ -929,7 +931,7 @@ class _FavorRareTable(Mutator):
         return self.rule_frequencies
 
     def _needs_rule_counts(self) -> bool:
-        return self._global_order() and self.rule_frequencies is None and len(self.rules) > 1
+        return self.rule_frequencies is None
 
     def _frequencies(self, counts: np.ndarray):
         return [int(c) for c in counts]
@@ -947,44 +949,82 @@ class _FavorRareTable(Mutator):
         "Streaming")."""
         return self._frequencies(count_rule_matches(df, [(column, self)], self.name)[0])
 
-    def _transform(self, col, rand, selected):
-        return self._kernel(col, rand, selected, None)
-
-    def _transform_with_frame(self, df, col, rand, selected, counts=None):
-        if not self._global_order():
-            return self._transform(col, rand, selected)
+    def _transform(self, col, rand, selected, counts=None):
         if self.rule_frequencies is not None:
             counts = self._supplied_counts()
-        elif len(self.rules) == 1:
-            return self._kernel(col, rand, selected, [0])
-        elif counts is None:
-            if df.isStreaming:
-                return self._transform(col, rand, selected)
-            counts = count_rule_matches(df, [(col, self)], self.name)[0]
-        return self._kernel(col, rand, selected, self._order_from(counts))
+        order = None if counts is None else self._order_from(counts)
+        return self._kernel(col, rand, selected, order)
+
+    def _kernel(self, col, rand, selected, order):
+        """Arrow kernel applying the rules in ``order`` (rule indices;
+        None = ``_order_from`` the batch's own match counts)."""
+        rules, rule_matches, rewrite = self.rules, self._rule_matches, self._rewrite
+        order_from = self._order_from
+
+        @F.pandas_udf(T.StringType())
+        def _inverse_option(vals: pd.Series, sel: pd.Series, u: pd.Series) -> pd.Series:
+            mask = sel.fillna(False).to_numpy(dtype=bool)
+            if not mask.any():
+                return vals.copy()
+            out_np = vals.to_numpy(dtype=object).copy()
+            # FACTORIZE the batch: rule matches and rewrites are pure
+            # functions of the VALUE, so they run once per distinct value
+            # and fan back out through the codes. The per-row accept/skip
+            # draws are untouched, so outputs are bit-identical.
+            codes, uniques = pd.factorize(vals.fillna(""))
+            uniq_np = np.asarray(uniques, dtype=object)
+            match = rule_matches(uniq_np)[:, codes]
+            options = match.sum(axis=0).astype(np.float64)
+            rule_order = order_from(match.sum(axis=1)) if order is None else order
+            au = u.to_numpy(np.float64)
+            done = np.zeros(len(vals), dtype=bool)
+            for step, r in enumerate(rule_order):
+                au = _expand_u(au, step + 1)
+                prob = np.where(options > 0, 1.0 / np.maximum(options, 1.0), 0.0)
+                rows = mask & ~done & match[r] & (au < prob)
+                options[match[r] & ~rows] -= 1
+                if not rows.any():
+                    continue
+                sel_codes, inverse = np.unique(codes[rows], return_inverse=True)
+                new = rewrite(uniq_np[sel_codes], rules[r])[inverse]
+                changed = new != uniq_np[codes[rows]]
+                idx = np.flatnonzero(rows)[changed]
+                out_np[idx] = new[changed]
+                done[idx] = True
+            return pd.Series(out_np, index=vals.index)
+
+        return _inverse_option(col, selected, rand.uniform(1))
 
 
-class _ReplacementTable(_FavorRareTable):
+class _WholeValueReplacement(Mutator):
     name = "with_replacement_table"
 
-    def __init__(
-        self,
-        table: pd.DataFrame,
-        inline: bool,
-        order: str = "global",
-        rule_frequencies: Optional[dict] = None,
-    ):
-        if table.empty:
-            raise ValueError("replacement table is empty")
-        if order not in ("global", "batch"):
-            raise ValueError("order must be 'global' or 'batch'")
-        self.inline = inline
-        self.order = order
-        # source -> list of targets, preserving table order
-        self.targets: dict[str, list[str]] = {}
-        for src, tgt in zip(table["source"], table["target"]):
-            self.targets.setdefault(src, []).append(tgt)
-        self.rules = list(self.targets)  # the sources
+    def __init__(self, targets: dict[str, list[str]]):
+        self.targets = targets
+
+    def _eligible(self, col, rand):
+        return col.isin(list(self.targets))
+
+    def _transform(self, col, rand, selected):
+        # pure Column algebra: a broadcast map lookup plus a uniform pick
+        # among the source's targets (gecko/mutator.py:595-599 equality
+        # match)
+        map_args = []
+        for src, tgts in self.targets.items():
+            map_args.append(F.lit(src))
+            map_args.append(F.array(*[F.lit(t) for t in tgts]))
+        tgt_arr = F.element_at(F.create_map(*map_args), col)
+        pick = rand.uniform_int(1, F.size(tgt_arr))
+        mutated = F.element_at(tgt_arr, (pick + F.lit(1)).cast("int"))
+        return F.when(selected & tgt_arr.isNotNull(), mutated).otherwise(col)
+
+
+class _InlineReplacement(_FavorRareTable):
+    name = "with_replacement_table"
+
+    def __init__(self, targets: dict[str, list[str]], rule_frequencies: Optional[dict]):
+        self.targets = targets
+        self.rules = list(targets)  # the sources
         if rule_frequencies is not None:
             unknown = set(rule_frequencies) - set(self.rules)
             if unknown:
@@ -1000,9 +1040,6 @@ class _ReplacementTable(_FavorRareTable):
             dtype=bool,
         )
 
-    def _global_order(self) -> bool:
-        return self.inline and self.order == "global"
-
     def _order_from(self, counts):
         # ascending: the rarest source wins (gecko/mutator.py:618-624)
         return sorted(
@@ -1017,35 +1054,16 @@ class _ReplacementTable(_FavorRareTable):
         return {src: int(c) for src, c in zip(self.rules, counts)}
 
     def _eligible(self, col, rand):
-        if self.inline:
-            alts = "|".join(re.escape(s) for s in self.rules)
-            return col.rlike(f"(?:{alts})")
-        return col.isin(self.rules)
-
-    def _transform(self, col, rand, selected):
-        if not self.inline:
-            # whole-value mode is pure Column algebra: a broadcast map
-            # lookup plus a uniform pick among the source's targets
-            # (gecko/mutator.py:595-599 equality match)
-            map_args = []
-            for src, tgts in self.targets.items():
-                map_args.append(F.lit(src))
-                map_args.append(F.array(*[F.lit(t) for t in tgts]))
-            m = F.create_map(*map_args)
-            tgt_arr = F.element_at(m, col)
-            pick = rand.uniform_int(1, F.size(tgt_arr))
-            mutated = F.element_at(tgt_arr, (pick + F.lit(1)).cast("int"))
-            return F.when(selected & tgt_arr.isNotNull(), mutated).otherwise(col)
-        return self._kernel(col, rand, selected, None)
+        alts = "|".join(re.escape(s) for s in self.rules)
+        return col.rlike(f"(?:{alts})")
 
     def _kernel(self, col, rand, selected, order):
         """Arrow kernel for inline (substring) replacement: each selected
-        row takes the first source in ascending-frequency order that it
-        contains. ``order=None`` (``order="batch"``) ranks sources by
-        their matches among each batch's selected rows — one pass, no
-        count job, but rows matching several sources then depend on
-        batch boundaries."""
-        sources, targets, rule_matches = self.rules, self.targets, self._rule_matches
+        row takes the first source in ``order`` that it contains
+        (None = ``_order_from`` the matches among the batch's selected
+        rows)."""
+        sources, targets = self.rules, self.targets
+        rule_matches, order_from = self._rule_matches, self._order_from
 
         @F.pandas_udf(T.StringType())
         def _replace(vals: pd.Series, sel: pd.Series, u: pd.Series) -> pd.Series:
@@ -1056,14 +1074,7 @@ class _ReplacementTable(_FavorRareTable):
             filled = vals.fillna("")
             codes, uniques = pd.factorize(filled)
             match = rule_matches(np.asarray(uniques, dtype=object))[:, codes] & mask
-            if order is None:
-                hits = match.sum(axis=1)
-                src_order = sorted(
-                    (r for r in range(len(sources)) if hits[r]),
-                    key=lambda r: (hits[r], sources[r]),
-                )
-            else:
-                src_order = order
+            src_order = order_from(match.sum(axis=1)) if order is None else order
             au = u.to_numpy(np.float64)
             mutated = np.zeros(len(filled), dtype=bool)
             for r in src_order:
@@ -1093,7 +1104,6 @@ def with_replacement_table(
     reverse: bool = False,
     encoding: str = "utf-8",
     delimiter: str = ",",
-    order: str = "global",
     rule_frequencies: Optional[dict] = None,
 ) -> Mutator:
     """Generic replacement table, whole-value or substring (inline)
@@ -1102,22 +1112,28 @@ def with_replacement_table(
     Whole-value mode never leaves the JVM (broadcast map literal +
     seeded pick). Inline mode reproduces the reference's
     ascending-match-frequency first-occurrence semantics
-    (gecko/mutator.py:618-647): ``order="global"`` (default) takes the
-    source frequencies from the distinct-value count job — one per
-    ``mutate_data_frame``, shared by all its table steps — so rule
-    precedence is dataset-wide, deterministic under any partitioning,
-    and exactly oracle-checkable; ``order="batch"`` skips the count and
-    orders within each Arrow batch. ``rule_frequencies`` (a
-    ``{source: count}`` mapping, typically from
-    ``measure_rule_frequencies`` over historical data) supplies those
-    counts up front — no count job, and a STREAMING frame gets the same
-    dataset-global rule order as batch (without it, streams fall back
-    to batch-local ordering)."""
+    (gecko/mutator.py:618-647), with the source frequencies from the
+    distinct-value count job — one per ``mutate_data_frame``, shared by
+    all its table steps — so rule precedence is dataset-wide,
+    deterministic under any partitioning, and exactly oracle-checkable.
+    ``rule_frequencies`` (inline mode; a ``{source: count}`` mapping,
+    typically from ``measure_rule_frequencies`` over historical data)
+    supplies those counts up front — no count job, and a STREAMING
+    frame gets the same dataset-global rule order as batch (without it,
+    streams fall back to batch-local ordering)."""
     table = load_replacement_table(
         data_source, source_column, target_column, reverse=reverse,
         delimiter=delimiter, encoding=encoding,
     )
-    return _ReplacementTable(table, inline, order, rule_frequencies)
+    if table.empty:
+        raise ValueError("replacement table is empty")
+    # source -> list of targets, preserving table order
+    targets: dict[str, list[str]] = {}
+    for src, tgt in zip(table["source"], table["target"]):
+        targets.setdefault(src, []).append(tgt)
+    if inline:
+        return _InlineReplacement(targets, rule_frequencies)
+    return _WholeValueReplacement(targets)
 
 
 def _aligned_frequencies(rule_frequencies, n_rules: int) -> Optional[list[int]]:
@@ -1173,84 +1189,16 @@ class _PhoneticReplacement(_FavorRareTable):
             conds = c if conds is None else (conds | c)
         return conds
 
-    def _kernel(self, col, rand, selected, global_order):
-        rules, rule_matches = self.rules, self._rule_matches
-
-        @F.pandas_udf(T.StringType())
-        def _phonetic(vals: pd.Series, sel: pd.Series, u: pd.Series) -> pd.Series:
-            mask = sel.fillna(False).to_numpy(dtype=bool)
-            if not mask.any():
-                return vals.copy()
-            out_np = vals.to_numpy(dtype=object).copy()
-            n = len(vals)
-
-            # FACTORIZE the batch (round 15, guide §4): match masks and
-            # replacement strings are pure functions of the VALUE, and
-            # mutator columns are typically low-cardinality (generated
-            # categories, names, dates), so the rule matches and regex
-            # replaces run over the batch's distinct values and fan back
-            # out through one integer gather. Row-level accept/skip
-            # draws below are untouched, so outputs are bit-identical.
-            codes, uniques = pd.factorize(vals.fillna(""))
-            uniq_np = np.asarray(uniques, dtype=object)
-            su = pd.Series(uniq_np)
-            matchu = rule_matches(uniq_np)
-            match = matchu[:, codes]
-
-            options = match.sum(axis=0).astype(np.float64)
-            # rule order: descending frequency; rows keep an
-            # inverse-options acceptance chance with decrementing
-            # counters so rare rules win (gecko/mutator.py:443-478).
-            # A global order (from the count job) keeps every row's
-            # draw sequence batch-invariant; the batch-local fallback
-            # serves streams.
-            if global_order is not None:
-                freq_order = global_order
-            else:
-                freq_order = sorted(
-                    (r for r in range(len(rules)) if match[r].any()),
-                    key=lambda r: -int(match[r].sum()),
-                )
-            au = u.to_numpy(np.float64)
-            done = np.zeros(n, dtype=bool)
-            for step, r in enumerate(freq_order):
-                pattern, replacement, flag = rules[r]
-                au = _expand_u(au, step + 1)
-                with np.errstate(divide="ignore"):
-                    prob = np.where(options > 0, 1.0 / np.maximum(options, 1.0), 0.0)
-                rows = mask & ~done & match[r] & (au < prob)
-                options[match[r] & ~rows] -= 1
-                if not rows.any():
-                    continue
-                # replacement per DISTINCT matching value, fanned out
-                # through the factorize codes — same regexes, same
-                # values, far fewer evaluations
-                subu = su[matchu[r]]
-                if flag == "^":
-                    newu = subu.str.replace(
-                        f"^{re.escape(pattern)}", replacement, n=1, regex=True
-                    )
-                elif flag == "$":
-                    newu = subu.str.replace(
-                        f"{re.escape(pattern)}$", replacement, n=1, regex=True
-                    )
-                else:
-                    newu = subu.str.replace(
-                        f"^(.+)(?:{re.escape(pattern)})(.+)$",
-                        rf"\g<1>{replacement}\g<2>",
-                        n=1,
-                        regex=True,
-                    )
-                repl_u = uniq_np.copy()
-                repl_u[matchu[r]] = newu.to_numpy(dtype=object)
-                new = repl_u[codes[rows]]
-                changed = new != uniq_np[codes[rows]]
-                idx = np.flatnonzero(rows)[changed]
-                out_np[idx] = new[changed]
-                done[idx] = True
-            return pd.Series(out_np, index=vals.index)
-
-        return _phonetic(col, selected, rand.uniform(1))
+    def _rewrite(self, values, rule):
+        pattern, replacement, flag = rule
+        if flag == "^":
+            regex, repl = f"^{re.escape(pattern)}", replacement
+        elif flag == "$":
+            regex, repl = f"{re.escape(pattern)}$", replacement
+        else:
+            regex, repl = f"^(.+)(?:{re.escape(pattern)})(.+)$", rf"\g<1>{replacement}\g<2>"
+        rewritten = pd.Series(values).str.replace(regex, repl, n=1, regex=True)
+        return rewritten.to_numpy(dtype=object)
 
 
 def with_phonetic_replacement_table(
@@ -1278,6 +1226,36 @@ def with_phonetic_replacement_table(
     return _PhoneticReplacement(rules, rule_frequencies)
 
 
+def _apply_regex_rule(value: str, pattern: re.Pattern, subs: dict[str, str]) -> str:
+    """Splice group substitutions at their spans, preserving non-group
+    text; substitution text may cross-reference other groups via
+    ``(?P<name>)`` markers (gecko/mutator.py:1392-1429)."""
+    m = pattern.search(value)
+    if m is None:
+        return value
+    group_order: list[tuple[int, int, str]] = []
+    named = {v: k for k, v in (pattern.groupindex or {}).items()}
+    for gi in range(1, (pattern.groups or 0) + 1):
+        label = named.get(gi, str(gi))
+        if label in subs and m.group(gi) is not None:
+            group_order.append((m.start(gi), m.end(gi), label))
+    group_order.sort()
+
+    def _xref(xm: re.Match) -> str:
+        try:
+            return m.group(xm.group(1)) or ""
+        except (IndexError, re.error):
+            return ""
+
+    out, cursor = [], m.start()
+    for start, end, label in group_order:
+        out.append(value[cursor:start])
+        out.append(re.sub(r"\(\?P<([A-Za-z_][A-Za-z0-9_]*)>\)", _xref, subs[label]))
+        cursor = end
+    out.append(value[cursor : m.end()])
+    return value[: m.start()] + "".join(out) + value[m.end() :]
+
+
 class _RegexReplacement(_FavorRareTable):
     name = "with_regex_replacement_table"
 
@@ -1300,92 +1278,9 @@ class _RegexReplacement(_FavorRareTable):
             out[r] = [pattern.search(v) is not None for v in texts]
         return out
 
-    def _kernel(self, col, rand, selected, global_order):
-        rules, rule_matches = self.rules, self._rule_matches
-
-        def _apply_rule(value: str, pattern: re.Pattern, subs: dict[str, str]) -> str:
-            m = pattern.search(value)
-            if m is None:
-                return value
-            # splice group substitutions at their spans, preserving
-            # non-group text; substitution text may cross-reference
-            # other groups via (?P<name>) markers
-            # (gecko/mutator.py:1392-1429)
-            group_order: list[tuple[int, int, str]] = []
-            labels = list(subs.keys())
-            named = {v: k for k, v in (pattern.groupindex or {}).items()}
-            for gi in range(1, (pattern.groups or 0) + 1):
-                label = named.get(gi, str(gi))
-                if label in subs and m.group(gi) is not None:
-                    group_order.append((m.start(gi), m.end(gi), label))
-            group_order.sort()
-            out, cursor = [], m.start()
-            prefix = value[: m.start()]
-            for start, end, label in group_order:
-                out.append(value[cursor:start])
-                sub = subs[label]
-                # resolve cross-references like (?P<other>)
-                def _xref(xm: re.Match) -> str:
-                    name = xm.group(1)
-                    try:
-                        return m.group(name) or ""
-                    except (IndexError, re.error):
-                        return ""
-                sub = re.sub(r"\(\?P<([A-Za-z_][A-Za-z0-9_]*)>\)", _xref, sub)
-                out.append(sub)
-                cursor = end
-            out.append(value[cursor : m.end()])
-            suffix = value[m.end() :]
-            return prefix + "".join(out) + suffix
-
-        @F.pandas_udf(T.StringType())
-        def _regex(vals: pd.Series, sel: pd.Series, u: pd.Series) -> pd.Series:
-            mask = sel.fillna(False).to_numpy(dtype=bool)
-            if not mask.any():
-                return vals.copy()
-            out_np = vals.to_numpy(dtype=object).copy()
-            # FACTORIZE the batch (round 15, guide §4): pattern.search
-            # and _apply_rule are pure functions of the VALUE — running
-            # them once per distinct value and fanning out through the
-            # codes gather turns the per-row Python regex loop into a
-            # per-distinct one (dates/categories repeat massively; an
-            # all-distinct batch pays only one extra hash pass). The
-            # per-row accept/skip draws are untouched → bit-identical.
-            codes, uniques = pd.factorize(vals.fillna(""))
-            uniq_np = np.asarray(uniques, dtype=object)
-            n = len(vals)
-            match = rule_matches(uniq_np)[:, codes]
-            options = match.sum(axis=0).astype(np.float64)
-            if global_order is not None:
-                freq_order = global_order
-            else:
-                freq_order = sorted(
-                    (r for r in range(len(rules)) if match[r].any()),
-                    key=lambda r: -int(match[r].sum()),
-                )
-            au = u.to_numpy(np.float64)
-            done = np.zeros(n, dtype=bool)
-            for step, r in enumerate(freq_order):
-                pattern, subs = rules[r]
-                au = _expand_u(au, step + 1)
-                prob = np.where(options > 0, 1.0 / np.maximum(options, 1.0), 0.0)
-                rows = mask & ~done & match[r] & (au < prob)
-                options[match[r] & ~rows] -= 1
-                if not rows.any():
-                    continue
-                sel_codes = codes[rows]
-                new_u = {
-                    int(c): _apply_rule(uniq_np[c], pattern, subs)
-                    for c in np.unique(sel_codes)
-                }
-                new = np.array([new_u[c] for c in sel_codes], dtype=object)
-                changed = new != uniq_np[sel_codes]
-                idx = np.flatnonzero(rows)[changed]
-                out_np[idx] = new[changed]
-                done[idx] = True
-            return pd.Series(out_np, index=vals.index)
-
-        return _regex(col, selected, rand.uniform(1))
+    def _rewrite(self, values, rule):
+        pattern, subs = rule
+        return np.array([_apply_regex_rule(v, pattern, subs) for v in values], dtype=object)
 
 
 def with_regex_replacement_table(

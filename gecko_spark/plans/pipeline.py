@@ -22,7 +22,11 @@ the input (``count_rule_matches``, described as
 ``gecko:mutate_data_frame:rule_frequencies``). A step that reads a
 column an earlier step wrote counts the mutated column in its own job,
 as the reference does; caller-supplied ``rule_frequencies`` and
-streaming input need no job.
+streaming input need no job. Only ``Mutator.apply``,
+``measure_rule_frequencies`` and ``mutate_data_frame`` start count
+jobs: the mutators take the counts they are handed and never count
+while their kernels are built. ``strict_p=True`` adds one labelled
+``avg(eligible)`` job per step (``gecko:<mutator>:strict_p``).
 """
 
 from __future__ import annotations

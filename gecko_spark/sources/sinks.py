@@ -34,6 +34,8 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gecko_spark.core import job_description
+
 __all__ = ["write_partitioned", "compact"]
 
 
@@ -67,7 +69,8 @@ def write_partitioned(
         # one task and the sub-split vanishes). Costs one small
         # distinct-count job over the partition columns — negligible next
         # to the write it sizes.
-        n_tuples = max(df.select(*partition_by).distinct().count(), 1)
+        with job_description(df.sparkSession, "gecko:write_partitioned:partition_tuples"):
+            n_tuples = max(df.select(*partition_by).distinct().count(), 1)
         # hash only xxhash64-able columns (maps are rejected by the
         # expression); every row has at least the partition columns
         hashable = [

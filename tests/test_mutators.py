@@ -701,6 +701,36 @@ def test_rule_count_job_is_labelled_and_restores_description(spark):
     assert sc.getLocalProperty("spark.job.description") is None
 
 
+def test_strict_p_job_is_labelled_and_restores_description(spark):
+    """The ``avg(eligible)`` job of ``strict_p`` runs as
+    ``gecko:<mutator>:strict_p``; the caller's description comes back
+    afterwards, also when the job fails."""
+    from pyspark import TaskContext
+
+    sc = spark.sparkContext
+    label = "gecko:with_delete:strict_p"
+    hits = sc.accumulator(0)
+
+    def probe(v):  # counts the rows evaluated inside the labelled job
+        if TaskContext.get().getLocalProperty("spark.job.description") == label:
+            hits.add(1)
+        return v
+
+    sdf = spark.createDataFrame([("ab",), ("",), ("c",)], "v string")
+    probed = sdf.select(F.udf(probe, "string")("v").alias("v"))
+    failing = sdf.select(F.raise_error(F.lit("boom")).cast("string").alias("v"))
+    sc.setJobDescription("caller")
+    try:
+        M.with_delete().apply(probed, "v", 0.5, strict_p=True)
+        assert hits.value == 3
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        with pytest.raises(Exception, match="boom"):
+            M.with_delete().apply(failing, "v", 0.5, strict_p=True)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+
+
 # -- mutate_data_frame: one count job -----------------------------------------
 
 
@@ -798,3 +828,101 @@ def test_pipeline_runs_one_count_job_for_its_table_steps(spark):
     assert 1 <= len(jobs) <= 2, jobs
     assert out.count() == 300
     sdf.unpersist()
+
+
+def _job_ids(spark, group, action):
+    """Spark job ids that ``action()`` started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group, False)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+def test_apply_counts_all_its_columns_in_one_job(spark):
+    """``apply`` of a favor-rare table to two columns starts the jobs
+    of one count, as to one column, not one count per column."""
+    data = pd.DataFrame({"v": ["abc", "ab", "bc"] * 50})
+    data["w"] = data["v"]
+    sdf = spark_from_pandas(data).cache()
+    sdf.count()
+    ocr, _, _ = _tables()
+    one = _job_ids(spark, "gecko-apply-one", lambda: ocr.apply(sdf, ["v"], 0.5, seed=1))
+    two = _job_ids(spark, "gecko-apply-two", lambda: ocr.apply(sdf, ["v", "w"], 0.5, seed=1))
+    assert 1 <= len(one) <= 2, one
+    assert len(two) == len(one), (one, two)
+    sdf.unpersist()
+
+
+def test_favor_rare_table_in_a_group_uses_supplied_frequencies(spark):
+    """A favor-rare table inside ``with_group`` applies the
+    ``rule_frequencies`` it was given: on "abc" the supplied counts make
+    "bc" the rarer source, as through ``apply``."""
+    sdf = spark_from_pandas(pd.DataFrame({"v": ["abc"] * 20}))
+    tbl = pd.DataFrame({"s": ["ab", "bc"], "t": ["X", "Y"]})
+    mut = M.with_replacement_table(
+        tbl, "s", "t", inline=True, rule_frequencies={"ab": 100, "bc": 1}
+    )
+    direct = mut.apply(sdf, ["v"], 1.0, seed=2).toPandas()["v"]
+    grouped = M.with_group([(1.0, mut)]).apply(sdf, ["v"], 1.0, seed=2).toPandas()["v"]
+    assert (direct == "aY").all()
+    assert (grouped == "aY").all()
+
+
+def _single_rule_tables(ocr=None, phonetic=None, regex=None):
+    """One-rule inline, phonetic and regex tables; the arguments are
+    their rule_frequencies."""
+    return [
+        M.with_replacement_table(
+            pd.DataFrame({"s": ["ab"], "t": ["X"]}), "s", "t", inline=True,
+            rule_frequencies=ocr,
+        ),
+        M.with_phonetic_replacement_table(
+            pd.DataFrame({"s": ["sch"], "t": ["sh"], "f": ["^"]}), "s", "t", "f",
+            rule_frequencies=phonetic,
+        ),
+        M.with_regex_replacement_table(
+            pd.DataFrame({"pattern": [r"(?P<d>\d)"], "d": ["9"]}),
+            pattern_column="pattern", rule_frequencies=regex,
+        ),
+    ]
+
+
+def test_single_rule_tables_match_supplied_frequencies(spark):
+    """A one-rule table orders trivially: counted by ``apply`` or by
+    ``mutate_data_frame``, it gives the rows it gives with the counts
+    supplied up front."""
+    data = pd.DataFrame({"a": ["abc", "x", None, "ab ab", "schab1"] * 40})
+    data["b"], data["c"] = data["a"], data["a"]
+    sdf = spark_from_pandas(data)
+    counted = _single_rule_tables()
+    frequencies = [m.measure_rule_frequencies(sdf, "a") for m in counted]
+    assert frequencies == [{"ab": 120}, [40], [40]]
+    supplied = _single_rule_tables(*frequencies)
+    for auto, given in zip(counted, supplied):
+        a = auto.apply(sdf, ["a", "b"], 0.7, seed=4)
+        b = given.apply(sdf, ["a", "b"], 0.7, seed=4)
+        assert _rows(a) == _rows(b)
+
+    def spec(tables):
+        return [(c, (0.7, m)) for c, m in zip("abc", tables)]
+
+    a = mutate_data_frame(sdf, spec(counted), seed=8, key_columns=["__idx__"])
+    b = mutate_data_frame(sdf, spec(supplied), seed=8, key_columns=["__idx__"])
+    assert _rows(a) == _rows(b)
+    assert _rows(a) != _rows(sdf)
+
+
+@pytest.mark.parametrize("rows", [[], [(i, None, None, None) for i in range(30)]])
+def test_table_steps_pass_empty_and_null_columns(spark, rows):
+    """An empty frame and all-null columns come out of three table
+    steps unchanged."""
+    sdf = spark.createDataFrame(rows, "__idx__ long, a string, b string, c string")
+    ocr, phonetic, regex = _tables()
+    spec = [("a", (1.0, ocr)), ("b", (1.0, phonetic)), ("c", (1.0, regex))]
+    out = mutate_data_frame(sdf, spec, seed=3, key_columns=["__idx__"])
+    assert _rows(out) == _rows(sdf)

@@ -94,6 +94,39 @@ def test_write_partitioned_sharded_hot_partition(spark, tmp_path):
     assert spark.read.parquet(out).count() == docs.count()
 
 
+def test_write_partitioned_tuple_count_is_labelled(spark, tmp_path):
+    """With ``files_per_partition > 1`` the distinct-tuple count runs as
+    ``gecko:write_partitioned:partition_tuples``; the caller's job
+    description comes back afterwards, also when the job fails."""
+    from pyspark import TaskContext
+
+    from gecko_spark.sources.sinks import write_partitioned
+
+    sc = spark.sparkContext
+    label = "gecko:write_partitioned:partition_tuples"
+    hits = sc.accumulator(0)
+
+    def probe(v):
+        if TaskContext.get().getLocalProperty("spark.job.description") == label:
+            hits.add(1)
+        return v
+
+    df = spark.range(40).select("id", (F.col("id") % 4).cast("string").alias("p"))
+    probed = df.select("id", F.udf(probe, "string")("p").alias("p"))
+    failing = df.select("id", F.raise_error(F.lit("boom")).cast("string").alias("p"))
+    sc.setJobDescription("caller")
+    try:
+        write_partitioned(probed, str(tmp_path / "ok"), ["p"], files_per_partition=2)
+        assert hits.value == 40
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        with pytest.raises(Exception, match="boom"):
+            write_partitioned(failing, str(tmp_path / "bad"), ["p"], files_per_partition=2)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+    assert spark.read.parquet(str(tmp_path / "ok")).count() == 40
+
+
 def test_compact_reduces_files(spark, tmp_path):
     from gecko_spark.sources.sinks import compact
 
