@@ -18,10 +18,21 @@ parallelism:
 
 Both expose ``uniform(salt) -> Column`` in [0, 1); independent draws use
 distinct salts.
+
+Plan-building steps that generators and mutators share live here, once:
+
+* :func:`json_literal` — a driver-side table (list or dict) enters a
+  plan as ONE JSON-decoded literal that the optimizer folds to a
+  constant, never as one ``F.lit`` per element;
+* :func:`bucket_index` — the bucket of a weighted pick: the first of a
+  list of running-sum bounds that a column lies below;
+* :func:`weighted_list` — "list of X, or list of (weight, X)" as
+  ``[(weight, X)]``, for ``from_group`` and ``with_group``.
 """
 
 from __future__ import annotations
 
+import json
 import os
 from contextlib import contextmanager
 from typing import Iterable, Iterator, Sequence, Union
@@ -118,6 +129,47 @@ def job_description(spark: SparkSession, description: str) -> Iterator[None]:
 
 
 # ---------------------------------------------------------------------------
+# Shared plan-building steps
+# ---------------------------------------------------------------------------
+
+
+def json_literal(value, spark_type: str) -> Column:
+    """``value`` (a driver-side list or dict) as a ``spark_type`` column
+    built with one JVM call, where a literal per element makes one call
+    per element. The optimizer folds the decode to a constant."""
+    return F.from_json(F.lit(json.dumps(value, ensure_ascii=False)), spark_type)
+
+
+def bucket_index(x: Column, bounds: Sequence) -> Column:
+    """Index of the first of the ascending ``bounds`` that ``x`` lies
+    below, ``len(bounds)`` when none: the bucket of a weighted pick when
+    ``bounds`` are the running sums of every weight but the last."""
+    if not bounds:
+        return F.lit(0)
+    expr = F.when(x < F.lit(bounds[0]), F.lit(0))
+    for i, bound in enumerate(bounds[1:], 1):
+        expr = expr.when(x < F.lit(bound), F.lit(i))
+    return expr.otherwise(F.lit(len(bounds)))
+
+
+def weighted_list(items: Sequence, kind: type, noun: str) -> list[tuple[float, object]]:
+    """``items`` — a list of ``kind``, or of ``(weight, kind)`` pairs —
+    as ``[(weight, item)]``; an unweighted list gets equal weights."""
+    if all(isinstance(item, kind) for item in items):
+        w = 1.0 / len(items)
+        return [(w, item) for item in items]
+    for item in items:
+        if not (
+            isinstance(item, tuple)
+            and len(item) == 2
+            and isinstance(item[0], (int, float))
+            and isinstance(item[1], kind)
+        ):
+            raise ValueError(f"invalid argument, must be a list of {noun}s or weighted {noun}s")
+    return list(items)
+
+
+# ---------------------------------------------------------------------------
 # Random sources
 # ---------------------------------------------------------------------------
 
@@ -174,7 +226,7 @@ class RandomSource:
 
     def choice(self, salt: int, values: Sequence[str]) -> Column:
         """Uniformly choose one of ``values`` (a small driver-side list)."""
-        arr = F.array(*[F.lit(v) for v in values])
+        arr = json_literal(list(values), "array<string>")
         return F.element_at(arr, (self.uniform_int(salt, len(values)) + 1).cast("int"))
 
 

@@ -9,7 +9,11 @@ so an arbitrary number of generators assemble into ONE projection over
 (:func:`gecko_spark.plans.pipeline.to_data_frame`).
 
 Randomness is derived per (row, operator, draw) — see core.py — so the
-same seed reproduces the same dataset under any partitioning.
+same seed reproduces the same dataset under any partitioning. Table
+literals (:func:`~gecko_spark.core.json_literal`), weighted picks
+(:func:`~gecko_spark.core.bucket_index`) and the weighted-list parser of
+``from_group`` (:func:`~gecko_spark.core.weighted_list`) are the ones
+the mutators use too.
 
 Scale notes (100 TB north star):
 * frequency-table sampling is inverse-CDF over the integer cumulative
@@ -24,9 +28,9 @@ Scale notes (100 TB north star):
 
 from __future__ import annotations
 
-import json
 import math
 from dataclasses import dataclass
+from itertools import accumulate
 from typing import Callable, Optional, Sequence, Union
 
 import numpy as np
@@ -35,7 +39,13 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from gecko_spark.core import RandomSource
+from gecko_spark.core import (
+    GeckoWarning,
+    RandomSource,
+    bucket_index,
+    json_literal,
+    weighted_list,
+)
 from gecko_spark.functions.datetime_patterns import strftime_to_spark
 from gecko_spark.sources.tables import TableSource, load_frequency_table
 
@@ -103,15 +113,15 @@ def from_function(func: Callable[..., str], *args, **kwargs) -> ColumnGenerator:
 # ---------------------------------------------------------------------------
 
 
-class _UniformGenerator(ColumnGenerator):
-    def __init__(self, low: float, high: float, precision: int, raw: bool):
-        self.low, self.high, self.precision, self.raw = low, high, precision, raw
+class _NumberGenerator(ColumnGenerator):
+    """Floats from ``draw(rand)``, formatted to ``precision`` decimals
+    unless ``raw``."""
 
-    def raw_column(self, rand: RandomSource) -> Column:
-        return rand.uniform(0) * F.lit(float(self.high - self.low)) + F.lit(float(self.low))
+    def __init__(self, draw: Callable[[RandomSource], Column], precision: int, raw: bool):
+        self.draw, self.precision, self.raw = draw, precision, raw
 
     def columns(self, rand: RandomSource, ctx: Optional[GenContext] = None) -> list[Column]:
-        val = self.raw_column(rand)
+        val = self.draw(rand)
         if self.raw:
             return [val]
         return [F.format_string(f"%.{self.precision}f", val)]
@@ -126,27 +136,11 @@ def from_uniform_distribution(
     """Floats ~ U[low, high) formatted to ``precision`` decimals
     (gecko/generator.py:52-78). ``raw=True`` skips formatting and
     yields a DoubleType column (engine extension)."""
-    return _UniformGenerator(low, high, precision, raw)
 
+    def draw(rand: RandomSource) -> Column:
+        return rand.uniform(0) * F.lit(float(high - low)) + F.lit(float(low))
 
-class _NormalGenerator(ColumnGenerator):
-    def __init__(self, mean: float, sd: float, precision: int, raw: bool):
-        self.mean, self.sd, self.precision, self.raw = mean, sd, precision, raw
-
-    def raw_column(self, rand: RandomSource) -> Column:
-        # Box-Muller from two independent uniforms; 1-u1 keeps log's
-        # argument in (0, 1].
-        u1, u2 = rand.uniform(0), rand.uniform(1)
-        z = F.sqrt(F.log(F.lit(1.0) - u1) * F.lit(-2.0)) * F.cos(
-            u2 * F.lit(2.0 * math.pi)
-        )
-        return z * F.lit(float(self.sd)) + F.lit(float(self.mean))
-
-    def columns(self, rand: RandomSource, ctx: Optional[GenContext] = None) -> list[Column]:
-        val = self.raw_column(rand)
-        if self.raw:
-            return [val]
-        return [F.format_string(f"%.{self.precision}f", val)]
+    return _NumberGenerator(draw, precision, raw)
 
 
 def from_normal_distribution(
@@ -157,7 +151,17 @@ def from_normal_distribution(
 ) -> ColumnGenerator:
     """Floats ~ N(mean, sd) formatted as strings
     (gecko/generator.py:81-107)."""
-    return _NormalGenerator(mean, sd, precision, raw)
+
+    def draw(rand: RandomSource) -> Column:
+        # Box-Muller from two independent uniforms; 1-u1 keeps log's
+        # argument in (0, 1].
+        u1, u2 = rand.uniform(0), rand.uniform(1)
+        z = F.sqrt(F.log(F.lit(1.0) - u1) * F.lit(-2.0)) * F.cos(
+            u2 * F.lit(2.0 * math.pi)
+        )
+        return z * F.lit(float(sd)) + F.lit(float(mean))
+
+    return _NumberGenerator(draw, precision, raw)
 
 
 # ---------------------------------------------------------------------------
@@ -188,7 +192,7 @@ class FrequencyTableGenerator(ColumnGenerator):
     def index_column(self, rand: RandomSource) -> Column:
         """Sampled config-row index in [0, k) as a LongType column."""
         u_int = rand.uniform_int(0, self.total)
-        cum = _array_literal(self.cum.tolist(), "bigint")
+        cum = json_literal(self.cum.tolist(), "array<bigint>")
         k = len(self.cum)
 
         # Upper-bound search carrying (lo, hi, u): u is evaluated once per
@@ -212,18 +216,8 @@ class FrequencyTableGenerator(ColumnGenerator):
 
     def columns(self, rand: RandomSource, ctx: Optional[GenContext] = None) -> list[Column]:
         pos = (self.index_column(rand) + F.lit(1)).cast("int")
-        return [
-            F.element_at(_array_literal([str(v) for v in self.values[c].tolist()], "string"), pos)
-            for c in self.values.columns
-        ]
-
-
-def _array_literal(items: list, element_type: str) -> Column:
-    """An array literal built with one JVM call: ``F.lit(list)`` makes
-    one call per element. The optimizer folds it to a constant."""
-    return F.from_json(
-        F.lit(json.dumps(items, ensure_ascii=False)), f"array<{element_type}>"
-    )
+        tables = [[str(v) for v in self.values[c].tolist()] for c in self.values.columns]
+        return [F.element_at(json_literal(t, "array<string>"), pos) for t in tables]
 
 
 def from_frequency_table(
@@ -356,17 +350,7 @@ class GroupGenerator(ColumnGenerator):
         self.arity = arities.pop()
 
     def _group_column_choice(self, rand: RandomSource) -> Column:
-        u = rand.uniform(0)
-        cum = 0.0
-        expr = F.lit(len(self.weighted) - 1)
-        # build reversed when-chain: first matching threshold wins
-        conds = []
-        for i, (w, _) in enumerate(self.weighted[:-1]):
-            cum += w
-            conds.append((u < F.lit(cum), i))
-        for cond, i in reversed(conds):
-            expr = F.when(cond, F.lit(i)).otherwise(expr)
-        return expr
+        return bucket_index(rand.uniform(0), list(accumulate(w for w, _ in self.weighted[:-1])))
 
     def _group_column_exact(self, rand: RandomSource, ctx: GenContext) -> Column:
         count = ctx.count
@@ -392,14 +376,7 @@ class GroupGenerator(ColumnGenerator):
         a = _coprime_multiplier(count, seed_mix)
         b = seed_mix % max(count, 1)
         perm = (ctx.idx * F.lit(a) + F.lit(b)) % F.lit(count)
-        boundaries = np.cumsum(counts)
-        expr = F.lit(len(counts) - 1)
-        conds = []
-        for i, bound in enumerate(boundaries[:-1]):
-            conds.append((perm < F.lit(int(bound)), i))
-        for cond, i in reversed(conds):
-            expr = F.when(cond, F.lit(i)).otherwise(expr)
-        return expr
+        return bucket_index(perm, list(accumulate(counts[:-1])))
 
     def columns(self, rand: RandomSource, ctx: Optional[GenContext] = None) -> list[Column]:
         if self.mode == "exact":
@@ -444,8 +421,6 @@ def from_group(
     if max_rounding_adjustment != 0:
         import warnings
 
-        from gecko_spark.core import GeckoWarning
-
         warnings.warn(
             "max_rounding_adjustment has no effect in gecko_spark: "
             "largest-remainder allocation never leaves rounding drift "
@@ -453,19 +428,4 @@ def from_group(
             GeckoWarning,
             stacklevel=2,
         )
-    if all(isinstance(g, ColumnGenerator) for g in generator_lst):
-        p = 1.0 / len(generator_lst)
-        weighted = [(p, g) for g in generator_lst]
-    else:
-        weighted = list(generator_lst)  # type: ignore[arg-type]
-        for item in weighted:
-            if not (
-                isinstance(item, tuple)
-                and len(item) == 2
-                and isinstance(item[0], (int, float))
-                and isinstance(item[1], ColumnGenerator)
-            ):
-                raise ValueError(
-                    "invalid argument, must be a list of generators or weighted generators"
-                )
-    return GroupGenerator(weighted, mode=mode)
+    return GroupGenerator(weighted_list(generator_lst, ColumnGenerator, "generator"), mode=mode)

@@ -25,12 +25,21 @@ match counts, measured by one distinct-value job
 (:func:`count_rule_matches`). Only ``Mutator.apply``,
 ``measure_rule_frequencies`` and ``mutate_data_frame`` start that job;
 building a kernel never runs a Spark job.
+
+Shared plan-building steps: every mutator is applied column by column
+through one method, ``Mutator._mutate_columns`` — ``apply``,
+``mutate_data_frame`` and ``with_group`` differ only in how they select
+rows. Table literals (:func:`~gecko_spark.core.json_literal`), the
+weighted pick of ``with_group`` (:func:`~gecko_spark.core.bucket_index`)
+and its weighted-list parser (:func:`~gecko_spark.core.weighted_list`)
+are the ones the generators use too.
 """
 
 from __future__ import annotations
 
 import re
 import string as _string
+from itertools import accumulate
 from typing import Callable, Optional, Sequence, Union
 
 import numpy as np
@@ -40,11 +49,15 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gecko_spark.core import (
+    GeckoWarning,
     HashRandom,
     RandomSource,
     bernoulli_select,
+    bucket_index,
     check_probability,
     job_description,
+    json_literal,
+    weighted_list,
 )
 from gecko_spark.functions.datetime_patterns import strftime_to_spark
 from gecko_spark.functions.strings import (
@@ -175,31 +188,44 @@ class Mutator:
     ) -> DataFrame:
         """``apply`` after validation; ``rule_counts`` maps a column to
         rule-match counts already measured for it."""
-        rule_counts = rule_counts or {}
-        out: dict[str, Column] = {}
         if self.group_arity:
             self._validate_group(len(columns))
-            cols = [F.col(c) for c in columns]
-            eligible = self._eligible_group(cols, rand)
-            p_eff = self._strict_rescale(df, eligible, p) if strict_p else p
-            selected = bernoulli_select(rand, _SALT_SELECT, p_eff, eligible)
-            for c, expr in zip(columns, self._transform_group(cols, rand, selected)):
-                out[c] = expr
-        else:
-            for i, c in enumerate(columns):
-                r = rand.fork(i)
-                col = F.col(c)
-                eligible = self._eligible(col, r)
-                p_eff = self._strict_rescale(df, eligible, p) if strict_p else p
-                selected = bernoulli_select(r, _SALT_SELECT, p_eff, eligible)
-                if c in rule_counts:
-                    out[c] = self._transform(col, r, selected, rule_counts[c])
-                else:
-                    out[c] = self._transform(col, r, selected)
 
+        def select(r: RandomSource, eligible: Optional[Column]) -> Column:
+            p_eff = self._strict_rescale(df, eligible, p) if strict_p else p
+            return bernoulli_select(r, _SALT_SELECT, p_eff, eligible)
+
+        counts = [(rule_counts or {}).get(c) for c in columns]
+        mutated = self._mutate_columns([F.col(c) for c in columns], rand, select, counts)
+        out = dict(zip(columns, mutated))
         return df.select(
             *[out[c].alias(c) if c in out else F.col(c) for c in df.columns]
         )
+
+    def _mutate_columns(
+        self,
+        cols: list[Column],
+        rand: RandomSource,
+        select: Callable[[RandomSource, Optional[Column]], Column],
+        counts: Optional[Sequence[Optional[np.ndarray]]] = None,
+    ) -> list[Column]:
+        """``cols`` mutated on the rows ``select(rand, eligible)`` picks:
+        the one per-column path of ``apply``, ``mutate_data_frame`` and
+        ``with_group``. A group mutator sees every column at once; a
+        single-column mutator forks ``rand`` per column and transforms
+        column ``i`` with the rule-match counts ``counts[i]``, if any."""
+        if self.group_arity:
+            return self._transform_group(cols, rand, select(rand, self._eligible_group(cols, rand)))
+        out = []
+        for i, col in enumerate(cols):
+            r = rand.fork(i)
+            selected = select(r, self._eligible(col, r))
+            count = counts[i] if counts else None
+            if count is None:
+                out.append(self._transform(col, r, selected))
+            else:
+                out.append(self._transform(col, r, selected, count))
+        return out
 
     def _strict_rescale(self, df: DataFrame, eligible: Optional[Column], p: float) -> float:
         """Measure the eligible fraction (one aggregation job), warn when
@@ -207,8 +233,6 @@ class Mutator:
         — the reference's exact contract (gecko/mutator.py:68-73,
         :688-691)."""
         import warnings
-
-        from gecko_spark.core import GeckoWarning
 
         if eligible is None:
             return p
@@ -378,26 +402,29 @@ def _not_is_cased_kernel(method: str):
     return _kern
 
 
-class _Lowercase(Mutator):
-    name = "with_lowercase"
+class _ChangeCase(Mutator):
+    """Lower- or upper-case the value: ``convert`` is ``F.lower`` or
+    ``F.upper``, ``method`` the matching ``str`` predicate (``islower``
+    or ``isupper``) of the reference's eligibility."""
 
-    def __init__(self, exact_eligibility: bool = False):
+    def __init__(self, name: str, convert, method: str, exact_eligibility: bool):
+        self.name, self.convert, self.method = name, convert, method
         self.exact = exact_eligibility
 
     def _eligible(self, col, rand):
         if self.exact:
-            return _not_is_cased_kernel("islower")(col)
-        # Column approximation of Python's ~str.islower() eligibility
-        # (gecko/mutator.py:1141-1142): differs only for strings with no
-        # cased characters, whose mutation is a no-op anyway — but under
-        # strict_p those rows change the measured eligible fraction, so
-        # the warning/rescale can deviate from the reference on
-        # digit-heavy columns. exact_eligibility=True restores parity
-        # at the cost of one Arrow kernel per row.
-        return col != F.lower(col)
+            return _not_is_cased_kernel(self.method)(col)
+        # Column approximation of Python's ~str.islower() / ~isupper()
+        # eligibility (gecko/mutator.py:1141-1142): differs only for
+        # strings with no cased characters, whose mutation is a no-op
+        # anyway — but under strict_p those rows change the measured
+        # eligible fraction, so the warning/rescale can deviate from the
+        # reference on digit-heavy columns. exact_eligibility=True
+        # restores parity at the cost of one Arrow kernel per row.
+        return col != self.convert(col)
 
     def _mutate(self, col, rand):
-        return F.lower(col)
+        return self.convert(col)
 
 
 def with_lowercase(exact_eligibility: bool = False) -> Mutator:
@@ -406,28 +433,13 @@ def with_lowercase(exact_eligibility: bool = False) -> Mutator:
     instead of the JVM-side ``col != lower(col)`` approximation —
     mutation output is identical either way; only the ``strict_p``
     warning threshold/rescale on such rows differs."""
-    return _Lowercase(exact_eligibility)
-
-
-class _Uppercase(Mutator):
-    name = "with_uppercase"
-
-    def __init__(self, exact_eligibility: bool = False):
-        self.exact = exact_eligibility
-
-    def _eligible(self, col, rand):
-        if self.exact:
-            return _not_is_cased_kernel("isupper")(col)
-        return col != F.upper(col)
-
-    def _mutate(self, col, rand):
-        return F.upper(col)
+    return _ChangeCase("with_lowercase", F.lower, "islower", exact_eligibility)
 
 
 def with_uppercase(exact_eligibility: bool = False) -> Mutator:
     """See :func:`with_lowercase` — same ``exact_eligibility`` contract
     with ``~isupper()``."""
-    return _Uppercase(exact_eligibility)
+    return _ChangeCase("with_uppercase", F.upper, "isupper", exact_eligibility)
 
 
 class _Repeat(Mutator):
@@ -459,7 +471,7 @@ class _CategoricalValues(Mutator):
         return col.isin(self.uniques)  # gecko/mutator.py:1016-1018
 
     def _mutate(self, col, rand):
-        arr = F.array(*[F.lit(v) for v in self.uniques])
+        arr = json_literal(self.uniques, "array<string>")
         others = F.array_remove(arr, col)  # the k-1 different values
         pick = rand.uniform_int(1, F.size(others))
         return F.element_at(others, (pick + F.lit(1)).cast("int"))
@@ -663,34 +675,15 @@ class _Group(Mutator):
 
     def _transform_group(self, cols, rand, selected):
         # per-row mutator index ~ weights (gecko/mutator.py:1700-1703)
-        u = rand.uniform(1)
-        cum = 0.0
-        idx = F.lit(len(self.weighted) - 1)
-        conds = []
-        for j, (w, _) in enumerate(self.weighted[:-1]):
-            cum += w
-            conds.append((u < F.lit(cum), j))
-        for cond, j in reversed(conds):
-            idx = F.when(cond, F.lit(j)).otherwise(idx)
-
+        idx = bucket_index(rand.uniform(1), list(accumulate(w for w, _ in self.weighted[:-1])))
         outs = list(cols)
         for j, (_, mut) in enumerate(self.weighted):
             if isinstance(mut, _Noop):
                 continue
-            rj = rand.fork(j + 2)
             sel_j = selected & (idx == F.lit(j))
-            if mut.group_arity:
-                elig = mut._eligible_group(outs, rj)
-                sel = sel_j if elig is None else (sel_j & elig)
-                outs = mut._transform_group(outs, rj, sel)
-            else:
-                new_outs = []
-                for k, col in enumerate(outs):
-                    rk = rj.fork(k)
-                    elig = mut._eligible(col, rk)
-                    sel = sel_j if elig is None else (sel_j & elig)
-                    new_outs.append(mut._transform(col, rk, sel))
-                outs = new_outs
+            outs = mut._mutate_columns(
+                outs, rand.fork(j + 2), lambda _r, elig: sel_j if elig is None else (sel_j & elig)
+            )
         return outs
 
 
@@ -704,22 +697,7 @@ def with_group(
     All sub-mutators condition on the same drawn index column, so the
     whole group stays a single projection — no shuffle, no union.
     """
-    if all(isinstance(m, Mutator) for m in mutator_lst):
-        w = 1.0 / len(mutator_lst)
-        weighted = [(w, m) for m in mutator_lst]
-    else:
-        weighted = list(mutator_lst)  # type: ignore[arg-type]
-        for item in weighted:
-            if not (
-                isinstance(item, tuple)
-                and len(item) == 2
-                and isinstance(item[0], (int, float))
-                and isinstance(item[1], Mutator)
-            ):
-                raise ValueError(
-                    "invalid argument, must be a list of mutators or weighted mutators"
-                )
-    return _Group(weighted)
+    return _Group(weighted_list(mutator_lst, Mutator, "mutator"))
 
 
 # ---------------------------------------------------------------------------
@@ -1006,14 +984,10 @@ class _WholeValueReplacement(Mutator):
         return col.isin(list(self.targets))
 
     def _transform(self, col, rand, selected):
-        # pure Column algebra: a broadcast map lookup plus a uniform pick
+        # pure Column algebra: a map-literal lookup plus a uniform pick
         # among the source's targets (gecko/mutator.py:595-599 equality
         # match)
-        map_args = []
-        for src, tgts in self.targets.items():
-            map_args.append(F.lit(src))
-            map_args.append(F.array(*[F.lit(t) for t in tgts]))
-        tgt_arr = F.element_at(F.create_map(*map_args), col)
+        tgt_arr = F.element_at(json_literal(self.targets, "map<string,array<string>>"), col)
         pick = rand.uniform_int(1, F.size(tgt_arr))
         mutated = F.element_at(tgt_arr, (pick + F.lit(1)).cast("int"))
         return F.when(selected & tgt_arr.isNotNull(), mutated).otherwise(col)

@@ -159,9 +159,10 @@ def mutate_data_frame(
         mutator_lst: ``[(column(s), mutator | (p, mutator) | [...]), ...]``.
         seed: master seed; step ``i`` uses stream ``i``.
         key_columns: columns whose values identify a row for randomness
-            derivation; defaults to the columns being mutated at each
-            step. Supply a primary key for row-unique draws even when
-            payload values collide.
+            derivation; defaults to every column of the frame at each
+            step, so identical rows get identical draws and identical
+            mutated values (as from ``Mutator.apply``). Supply a primary
+            key for row-unique draws even when payload values collide.
         rand_for: optional override — ``rand_for(step_index)`` returns
             the RandomSource for that sequential (entry, mutator) step.
         strict_p: reproduce the reference's eligibility measurement,

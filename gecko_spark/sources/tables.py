@@ -11,7 +11,9 @@ Semantics mirrored from the reference (SURVEY.md §2.1/§2.2):
   (reference gecko/generator.py:157).
 
 Sources may be a CSV path, a pandas DataFrame, or a Spark DataFrame
-(collected — config tables are small by construction).
+(collected — config tables are small by construction). One reader,
+:func:`_read_table`, turns each into the same all-string frame, so a
+missing cell reads as "" whatever the source.
 """
 
 from __future__ import annotations
@@ -42,6 +44,34 @@ def _check_specs(specs: Sequence[Union[str, int]]) -> bool:
     )
 
 
+def _read_table(
+    source: TableSource, has_header: bool, delimiter: str, encoding: str
+) -> pd.DataFrame:
+    """The table behind ``source`` with every cell a string and every
+    missing cell (``None``, ``NaN``, Spark null, an empty CSV field)
+    an empty string. ``has_header`` and the CSV options apply to a
+    CSV path only."""
+    if isinstance(source, (str, Path)):
+        df = pd.read_csv(
+            source,
+            header=0 if has_header else None,
+            sep=delimiter,
+            encoding=encoding,
+            dtype=str,
+            keep_default_na=False,
+        )
+    elif isinstance(source, pd.DataFrame):
+        df = source
+    elif SparkDataFrame is not None and isinstance(source, SparkDataFrame):
+        df = source.toPandas()
+    else:
+        raise ValueError(f"unsupported config-table source type: {type(source)}")
+    # mask after astype: astype(str) stringifies missing values to the
+    # literal tokens 'nan'/'None'; masking (unlike fillna("")) also works
+    # on categorical columns
+    return df.astype(str).mask(df.isna(), "")
+
+
 def load_config_table(
     source: TableSource,
     column_specs: Sequence[Union[str, int]],
@@ -54,24 +84,7 @@ def load_config_table(
     order with their resolved labels replaced by the original specs
     (stringified positions for positional specs).
     """
-    has_header = _check_specs(column_specs)
-
-    if isinstance(source, (str, Path)):
-        df = pd.read_csv(
-            source,
-            header=0 if has_header else None,
-            sep=delimiter,
-            encoding=encoding,
-            dtype=str,
-            keep_default_na=False,
-        )
-    elif isinstance(source, pd.DataFrame):
-        df = source.copy()
-    elif SparkDataFrame is not None and isinstance(source, SparkDataFrame):
-        df = source.toPandas()
-    else:
-        raise ValueError(f"unsupported config-table source type: {type(source)}")
-
+    df = _read_table(source, _check_specs(column_specs), delimiter, encoding)
     out = {}
     for spec in column_specs:
         if isinstance(spec, int):
@@ -86,9 +99,7 @@ def load_config_table(
                     f"column `{spec}` not found, must be one of `{','.join(map(str, df.columns))}`"
                 )
             col = df[spec]
-        # fillna BEFORE astype: astype(str) would stringify missing
-        # values to the literal tokens 'nan'/'None' first
-        out[str(spec)] = col.fillna("").astype(str)
+        out[str(spec)] = col
     return pd.DataFrame(out).reset_index(drop=True)
 
 
@@ -207,18 +218,7 @@ def load_regex_table(
     Flags column supports ``a`` (ASCII) and ``i`` (IGNORECASE)
     (reference gecko/mutator.py:1432-1441).
     """
-    if isinstance(source, (str, Path)):
-        df = pd.read_csv(
-            source, header=0, sep=delimiter, encoding=encoding, dtype=str,
-            keep_default_na=False,
-        )
-    elif isinstance(source, pd.DataFrame):
-        df = source.copy()
-    elif SparkDataFrame is not None and isinstance(source, SparkDataFrame):
-        df = source.toPandas()
-    else:
-        raise ValueError(f"unsupported config-table source type: {type(source)}")
-
+    df = _read_table(source, True, delimiter, encoding)
     if pattern_column not in df.columns:
         raise ValueError(f"pattern column `{pattern_column}` not found")
 
@@ -230,7 +230,7 @@ def load_regex_table(
     for _, row in df.iterrows():
         flags = 0
         if flags_column is not None:
-            for f in str(row[flags_column]).strip():
+            for f in row[flags_column].strip():
                 if f == "a":
                     flags |= re.ASCII
                 elif f == "i":

@@ -926,3 +926,58 @@ def test_table_steps_pass_empty_and_null_columns(spark, rows):
     spec = [("a", (1.0, ocr)), ("b", (1.0, phonetic)), ("c", (1.0, regex))]
     out = mutate_data_frame(sdf, spec, seed=3, key_columns=["__idx__"])
     assert _rows(out) == _rows(sdf)
+
+
+# -- edge inputs ---------------------------------------------------------------
+
+_REGEX_CSV = "pattern,flags,d,c\n(?P<d>\\d)(?P<c>c),,9,\n(?P<c>b),i,,k\n"
+
+
+@pytest.mark.parametrize("missing", ["pandas_none", "pandas_nan", "spark_null"])
+def test_regex_table_missing_cells_read_as_empty(spark, tmp_path, missing):
+    """A missing group or flags cell of an in-memory regex table reads
+    like the empty cell of the same table as CSV: an empty substitution
+    (the group is deleted) and no flags."""
+    csv = tmp_path / "regex.csv"
+    csv.write_text(_REGEX_CSV, encoding="utf-8")
+    gap = np.nan if missing == "pandas_nan" else None
+    table = pd.DataFrame({
+        "pattern": [r"(?P<d>\d)(?P<c>c)", r"(?P<c>b)"],
+        "flags": [gap, "i"],
+        "d": ["9", gap],
+        "c": [gap, "k"],
+    })
+    if missing == "spark_null":
+        table = spark.createDataFrame(table, "pattern string, flags string, d string, c string")
+    sdf = spark_from_pandas(pd.DataFrame({"v": ["a1c", "xB", "zz"] * 20}))
+
+    def run(source, flags_column):
+        mut = M.with_regex_replacement_table(source, "pattern", flags_column)
+        return _rows(mut.apply(sdf, ["v"], 1.0, seed=5))
+
+    assert {v for v, _ in run(str(csv), "flags")} == {"a9", "xk", "zz"}
+    for flags_column in ("flags", None):  # None: "flags" is one more group column
+        assert run(table, flags_column) == run(str(csv), flags_column)
+
+
+def test_duplicate_rows_share_draws_unless_keyed(spark):
+    """Without ``key_columns`` the draws are keyed on every column, so
+    identical rows get identical mutated values, from
+    ``mutate_data_frame`` and from ``Mutator.apply`` alike; keyed on a
+    row index, identical rows get draws of their own."""
+    rows = [(i, v, v) for i, v in enumerate(["alpha", "bravo"] * 200)]
+    keyed = spark.createDataFrame(rows, "__idx__ long, a string, orig string")
+    dups = keyed.drop("__idx__")
+    mut = M.with_insert()
+
+    def outcomes(df):  # distinct mutated values per input value
+        return df.toPandas().groupby("orig")["a"].nunique().to_dict()
+
+    one_each = {"alpha": 1, "bravo": 1}
+    assert outcomes(mutate_data_frame(dups, [("a", (0.5, mut))], seed=3)) == one_each
+    assert outcomes(mut.apply(dups, ["a"], 0.5, seed=3)) == one_each
+    for out in (
+        mutate_data_frame(keyed, [("a", (0.5, mut))], seed=3, key_columns=["__idx__"]),
+        mut.apply(keyed, ["a"], 0.5, rand=HashRandom(3, ["__idx__"])),
+    ):
+        assert min(outcomes(out).values()) > 1

@@ -1,4 +1,4 @@
-"""Plan-shape regression tests: the scale claims in README/PLANS.md,
+"""Plan-shape regression tests: the scale claims in README,
 asserted against the executed plan so refactors can't silently
 reintroduce shuffles, lose pushdown, or drop broadcasts."""
 
@@ -62,6 +62,11 @@ def test_frequency_tables_sample_without_python(spark):
 
 
 def test_mutator_chain_adds_no_exchange(spark, fruit_freq):
+    """Pure-Column mutators stay one narrow projection on the JVM, and
+    the tables they carry (charsets, categorical values, replacement
+    maps) are folded constants: no JSON decoding is left in the plan."""
+    import pandas as pd
+
     from gecko_spark.operators import generators as G
     from gecko_spark.operators import mutators as M
     from gecko_spark.plans.pipeline import mutate_data_frame, to_data_frame
@@ -73,17 +78,28 @@ def test_mutator_chain_adds_no_exchange(spark, fruit_freq):
         seed=1,
         keep_index=True,
     )
+    replacements = pd.DataFrame({"s": ["apple", "pear"], "t": ["appel", "peer"]})
     out = mutate_data_frame(
         base,
         [
             ("fruit", (0.2, M.with_delete())),
             ("fruit", (0.2, M.with_uppercase())),
             ("fruit", (0.2, M.with_repeat())),
+            ("fruit", (0.2, M.with_insert())),
+            ("fruit", (0.2, M.with_substitute())),
+            ("fruit", (0.2, M.with_categorical_values(fruit_freq, "fruit"))),
+            ("fruit", (0.2, M.with_replacement_table(replacements, "s", "t"))),
+            ("fruit", (0.5, M.with_group([(0.5, M.with_insert()), (0.3, M.with_transpose())]))),
         ],
         seed=2,
         key_columns=["__idx__"],
     )
-    assert "Exchange" not in _plan(out), "pure-Column mutator chains must stay narrow"
+    plan = _plan(out)
+    optimized = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Exchange" not in plan, "pure-Column mutator chains must stay narrow"
+    assert "EvalPython" not in plan and "EvalPython" not in optimized
+    for p in (plan, optimized):
+        assert "from_json" not in p and "JsonToStructs" not in p, "table literals must fold"
 
 
 def test_q6_filters_and_projection_reach_the_scan(spark):

@@ -1,6 +1,6 @@
 """Scale-stress harness: measure how the headline LLM-pipeline operators
-scale BEYOND the driver's sf0.1 (5k docs) — the one claim PLANS.md alone
-can't prove.
+scale BEYOND the driver's sf0.1 (5k docs) — the one claim a plan shape
+alone can't prove.
 
 The corpora are built by the ENGINE'S OWN generators + mutators
 (to_data_frame word sampling -> mutate_data_frame near-dup planting), so
