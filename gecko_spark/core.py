@@ -298,7 +298,9 @@ def bernoulli_select(
     check_probability(p)
     sel = rand.uniform(salt) < F.lit(float(p))
     if eligible is not None:
-        sel = eligible & sel
+        # the draw first: codegen skips the eligibility test of the rows
+        # it rejects (three-valued AND gives the same value either way)
+        sel = sel & eligible
     return sel
 
 

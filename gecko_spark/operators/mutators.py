@@ -14,17 +14,23 @@ shared contract (reference gecko/mutator.py:68-73 + §3.3 of SURVEY.md):
 
 Execution shape: every mutator contributes *column expressions* to one
 projection — chained mutators collapse into a handful of stages under
-Catalyst. Pure string/date algebra runs JVM-side in whole-stage
-codegen; the four table-driven mutators (CLDR typos, phonetic /
-inline-replacement / regex tables) each run ONE Arrow ``pandas_udf``
-whose inputs are (value, selection flag, uniform draws) — kernels are
-pure functions, all randomness is derived JVM-side (core.py policy), so
-results are partitioning-independent. Three of them (inline
-replacement, phonetic and regex tables) order their rules by global
-match counts, measured by one distinct-value job
-(:func:`count_rule_matches`). Only ``Mutator.apply``,
-``measure_rule_frequencies`` and ``mutate_data_frame`` start that job;
-building a kernel never runs a Spark job.
+Catalyst. String/date algebra runs JVM-side in whole-stage codegen; so
+do keyboard typos and inline replacement, as higher-order ``filter`` /
+``transform`` over one folded table literal. Only the phonetic and regex
+tables run an Arrow ``pandas_udf``, whose inputs are (value, selection
+flag, uniform draw) — kernels are pure functions, all randomness is
+derived JVM-side (core.py policy), so results are
+partitioning-independent.
+
+The favor-rare tables (inline replacement, phonetic and regex tables)
+order their rules by global match counts, measured by one
+distinct-value job (:func:`count_rule_matches`). A kernel is always
+handed its rule order: the table's ``rule_frequencies``, else the counts
+its caller measured. Only ``Mutator.apply``,
+``measure_rule_frequencies`` and ``mutate_data_frame`` start that job,
+and they also count the tables inside a ``with_group``; a stream cannot
+be counted, so there a table without ``rule_frequencies`` raises
+``ValueError``. Building a kernel never runs a Spark job.
 
 Shared plan-building steps: every mutator is applied column by column
 through one method, ``Mutator._mutate_columns`` — ``apply``,
@@ -64,6 +70,7 @@ from gecko_spark.functions.strings import (
     delete_char_at,
     insert_char_at,
     replace_char_at,
+    replace_first,
     transpose_at,
 )
 from gecko_spark.operators.generators import ColumnGenerator
@@ -123,21 +130,23 @@ class Mutator:
     def _mutate(self, col: Column, rand: RandomSource) -> Column:
         raise NotImplementedError
 
-    def _transform(self, col: Column, rand: RandomSource, selected: Column) -> Column:
+    def _transform(
+        self, col: Column, rand: RandomSource, selected: Column, counts: dict
+    ) -> Column:
         return F.when(selected, self._mutate(col, rand)).otherwise(col)
 
-    def _needs_rule_counts(self) -> bool:
-        """True when callers should measure this mutator's rule-match
-        counts (:func:`count_rule_matches`) and hand them to
-        ``_transform``."""
-        return False
+    def _rule_tables(self) -> list:
+        """The favor-rare tables this mutator applies whose rule-match
+        counts callers must measure (:func:`rule_counts`); ``counts``
+        maps each of them to its count vector over the column."""
+        return []
 
     # -- group hooks ---------------------------------------------------------
     def _eligible_group(self, cols: list[Column], rand: RandomSource) -> Optional[Column]:
         return None
 
     def _transform_group(
-        self, cols: list[Column], rand: RandomSource, selected: Column
+        self, cols: list[Column], rand: RandomSource, selected: Column, counts: list[dict]
     ) -> list[Column]:
         raise NotImplementedError
 
@@ -169,12 +178,7 @@ class Mutator:
             # hold constant values, which would make every row share one
             # draw (all-or-nothing selection)
             rand = HashRandom(seed, [F.col(c) for c in df.columns])
-        counts = {}
-        if self._needs_rule_counts() and not df.isStreaming:
-            # every column in one job; a stream cannot be counted, so its
-            # kernels order the rules per batch
-            pairs = [(c, self) for c in columns]
-            counts = dict(zip(columns, count_rule_matches(df, pairs, self.name)))
+        counts = rule_counts(df, [(c, self) for c in columns], self.name)
         return self._apply(df, columns, p, rand, strict_p, counts)
 
     def _apply(
@@ -184,10 +188,10 @@ class Mutator:
         p: float,
         rand: RandomSource,
         strict_p: bool,
-        rule_counts: Optional[dict[str, np.ndarray]] = None,
+        counts: list[dict],
     ) -> DataFrame:
-        """``apply`` after validation; ``rule_counts`` maps a column to
-        rule-match counts already measured for it."""
+        """``apply`` after validation; ``counts[i]`` holds the rule-match
+        counts already measured over ``columns[i]`` (:func:`rule_counts`)."""
         if self.group_arity:
             self._validate_group(len(columns))
 
@@ -195,7 +199,6 @@ class Mutator:
             p_eff = self._strict_rescale(df, eligible, p) if strict_p else p
             return bernoulli_select(r, _SALT_SELECT, p_eff, eligible)
 
-        counts = [(rule_counts or {}).get(c) for c in columns]
         mutated = self._mutate_columns([F.col(c) for c in columns], rand, select, counts)
         out = dict(zip(columns, mutated))
         return df.select(
@@ -207,24 +210,21 @@ class Mutator:
         cols: list[Column],
         rand: RandomSource,
         select: Callable[[RandomSource, Optional[Column]], Column],
-        counts: Optional[Sequence[Optional[np.ndarray]]] = None,
+        counts: list[dict],
     ) -> list[Column]:
         """``cols`` mutated on the rows ``select(rand, eligible)`` picks:
         the one per-column path of ``apply``, ``mutate_data_frame`` and
         ``with_group``. A group mutator sees every column at once; a
-        single-column mutator forks ``rand`` per column and transforms
-        column ``i`` with the rule-match counts ``counts[i]``, if any."""
+        single-column mutator forks ``rand`` per column. ``counts[i]``
+        maps each of ``_rule_tables()`` to its rule-match counts over
+        column ``i``."""
         if self.group_arity:
-            return self._transform_group(cols, rand, select(rand, self._eligible_group(cols, rand)))
+            selected = select(rand, self._eligible_group(cols, rand))
+            return self._transform_group(cols, rand, selected, counts)
         out = []
         for i, col in enumerate(cols):
             r = rand.fork(i)
-            selected = select(r, self._eligible(col, r))
-            count = counts[i] if counts else None
-            if count is None:
-                out.append(self._transform(col, r, selected))
-            else:
-                out.append(self._transform(col, r, selected, count))
+            out.append(self._transform(col, r, select(r, self._eligible(col, r)), counts[i]))
         return out
 
     def _strict_rescale(self, df: DataFrame, eligible: Optional[Column], p: float) -> float:
@@ -376,7 +376,7 @@ def with_substitute(charset: Union[str, Sequence[str]] = _string.ascii_letters) 
 class _Noop(Mutator):
     name = "with_noop"
 
-    def _transform(self, col, rand, selected):
+    def _transform(self, col, rand, selected, counts):
         return col
 
 
@@ -572,7 +572,7 @@ class _Permute(Mutator):
         if n_columns < 2:
             raise ValueError("permute mutator requires at least two columns")
 
-    def _transform_group(self, cols, rand, selected):
+    def _transform_group(self, cols, rand, selected, counts):
         ders = _derangements(len(cols))
         d = rand.uniform_int(1, len(ders))
         out = []
@@ -622,7 +622,7 @@ class _WithGenerator(Mutator):
                 f"got {self.generator.arity}, expected {n_columns}"
             )
 
-    def _transform_group(self, cols, rand, selected):
+    def _transform_group(self, cols, rand, selected, counts):
         gen_cols = self.generator.columns(rand.fork(7))
         out = []
         for col, gen in zip(cols, gen_cols):
@@ -673,7 +673,12 @@ class _Group(Mutator):
             weighted = weighted + [(1 - p_sum, with_noop())]
         self.weighted = weighted
 
-    def _transform_group(self, cols, rand, selected):
+    def _rule_tables(self):
+        # a sub-mutator only changes rows no other one changes, so its
+        # tables are counted over the group's input column
+        return list(dict.fromkeys(t for _, mut in self.weighted for t in mut._rule_tables()))
+
+    def _transform_group(self, cols, rand, selected, counts):
         # per-row mutator index ~ weights (gecko/mutator.py:1700-1703)
         idx = bucket_index(rand.uniform(1), list(accumulate(w for w, _ in self.weighted[:-1])))
         outs = list(cols)
@@ -682,7 +687,8 @@ class _Group(Mutator):
                 continue
             sel_j = selected & (idx == F.lit(j))
             outs = mut._mutate_columns(
-                outs, rand.fork(j + 2), lambda _r, elig: sel_j if elig is None else (sel_j & elig)
+                outs, rand.fork(j + 2),
+                lambda _r, elig: sel_j if elig is None else (sel_j & elig), counts,
             )
         return outs
 
@@ -711,7 +717,7 @@ class _WithFunction(Mutator):
     def __init__(self, func: Callable[..., str], args: tuple, kwargs: dict):
         self.func, self.args, self.kwargs = func, args, kwargs
 
-    def _transform(self, col, rand, selected):
+    def _transform(self, col, rand, selected, counts):
         func, args, kwargs = self.func, self.args, self.kwargs
 
         @F.pandas_udf(T.StringType())
@@ -738,7 +744,7 @@ def with_function(func: Callable[..., str], *args, **kwargs) -> Mutator:
 
 
 # ---------------------------------------------------------------------------
-# Table-driven mutators (Arrow kernels)
+# Table-driven mutators
 # ---------------------------------------------------------------------------
 
 
@@ -751,6 +757,24 @@ def _expand_u(u: np.ndarray, salt: int) -> np.ndarray:
     return m.astype(np.float64) / 2147483648.0
 
 
+def _contains(col: Column, part: Column) -> Column:
+    """``part in col``: the one match test of the keyboard-typo and
+    inline-replacement tables, for eligibility and kernel alike."""
+    return F.instr(col, part) > 0
+
+
+def _let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row. Spark
+    generates no code for ``filter`` and ``transform`` and would
+    re-evaluate ``value`` at every use inside ``body``."""
+    return F.get(F.transform(F.array(value), body), 0)
+
+
+def _pick(rand: RandomSource, salt: int, arr: Column) -> Column:
+    """Element ``floor(u * size)`` of ``arr``; null when it is empty."""
+    return F.get(arr, rand.uniform_int(salt, F.size(arr)).cast("int"))
+
+
 class _CldrKeymap(Mutator):
     name = "with_cldr_keymap_file"
 
@@ -758,42 +782,25 @@ class _CldrKeymap(Mutator):
         if not candidates:
             raise ValueError("keymap produced no typo candidates")
         self.candidates = candidates
-        # rows are eligible iff they contain at least one mapped char —
-        # checked JVM-side with a regex char class so the Arrow kernel
-        # only sees a cheap mask re-check
-        cls = "".join(re.escape(c) for c in sorted(candidates))
-        self._eligible_re = f"[{cls}]"
+
+    def _keymap(self) -> Column:
+        # in the map's order (gecko/mutator.py:236-242 accumulates per key)
+        entries = [{"key": k, "nbrs": v} for k, v in self.candidates.items()]
+        return json_literal(entries, "array<struct<key:string,nbrs:string>>")
 
     def _eligible(self, col, rand):
-        return col.rlike(self._eligible_re)
+        return F.exists(self._keymap(), lambda e: _contains(col, e["key"]))
 
-    def _transform(self, col, rand, selected):
-        candidates = self.candidates
+    def _mutate(self, col, rand):
+        # a random key the value contains, then a random neighbour: one
+        # code point of the key's neighbour string, spliced in for the
+        # key's first occurrence
+        def typo(e):
+            nbr = e["nbrs"].substr(rand.uniform_int(2, F.length(e["nbrs"])) + 1, F.lit(1))
+            return replace_first(col, e["key"], nbr)
 
-        @F.pandas_udf(T.StringType())
-        def _typo(vals: pd.Series, sel: pd.Series, u1: pd.Series, u2: pd.Series) -> pd.Series:
-            out = vals.copy()
-            mask = sel.fillna(False).to_numpy(dtype=bool)
-            if not mask.any():
-                return out
-            a1 = u1.to_numpy(np.float64)
-            a2 = u2.to_numpy(np.float64)
-            for i in np.flatnonzero(mask):
-                val = vals.iat[i]
-                if val is None:
-                    continue
-                # candidate chars present in the value, in sorted-map order
-                # (gecko/mutator.py:236-242 accumulates per map key)
-                pool = [c for c in candidates if c in val]
-                if not pool:
-                    continue
-                src = pool[int(a1[i] * len(pool))]
-                repl_opts = candidates[src]
-                repl = repl_opts[int(a2[i] * len(repl_opts))]
-                out.iat[i] = val.replace(src, repl, 1)
-            return out
-
-        return _typo(col, selected, rand.uniform(1), rand.uniform(2))
+        pool = F.filter(self._keymap(), lambda e: _contains(col, e["key"]))
+        return _let(pool, lambda p: _let(_pick(rand, 1, p), typo))
 
 
 def with_cldr_keymap_file(
@@ -803,7 +810,7 @@ def with_cldr_keymap_file(
     """Keyboard typos from a CLDR keymap: replace the first occurrence of
     a random mapped char with one of its keyboard neighbors
     (gecko/mutator.py:120-306). XML parsed once on the driver; the
-    candidate map is captured by the Arrow kernel."""
+    candidate map enters the plan as one folded literal."""
     return _CldrKeymap(load_cldr_candidates(cldr_path, charset))
 
 
@@ -826,7 +833,10 @@ def count_rule_matches(
     Every Arrow batch emits one partial count vector and the driver sums
     them: it holds O(batches × rules) integers, whatever the column
     cardinality. The job is described as
-    ``gecko:<caller>:rule_frequencies``."""
+    ``gecko:<caller>:rule_frequencies``; no job when ``pairs`` is
+    empty."""
+    if not pairs:
+        return []
     matchers = [mut._rule_matches for _, mut in pairs]
     bounds = np.cumsum([0] + [len(mut.rules) for _, mut in pairs])
 
@@ -861,6 +871,28 @@ def count_rule_matches(
     return [total[lo:hi] for lo, hi in zip(bounds[:-1], bounds[1:])]
 
 
+def rule_counts(
+    df: DataFrame, entries: Sequence[tuple[Union[str, Column], Mutator]], caller: str
+) -> list[dict]:
+    """For each ``(column, mutator)`` entry, ``{table: counts}`` over the
+    column for every favor-rare table the mutator applies
+    (``_rule_tables``), all from ONE :func:`count_rule_matches` job.
+
+    A stream cannot be counted (a static aggregate over an unbounded
+    input is undefined), so there a table without ``rule_frequencies``
+    raises ``ValueError`` while the plan is built."""
+    pairs = [(c, t) for c, mut in entries for t in mut._rule_tables()]
+    if pairs and df.isStreaming:
+        names = ", ".join(sorted({t.name for _, t in pairs}))
+        raise ValueError(
+            f"{names} without rule_frequencies cannot order its rules on a "
+            "stream: measure them once over a static frame with "
+            "measure_rule_frequencies and pass them as rule_frequencies"
+        )
+    vectors = iter(count_rule_matches(df, pairs, caller))
+    return [{t: next(vectors) for t in mut._rule_tables()} for _, mut in entries]
+
+
 class _FavorRareTable(Mutator):
     """A table mutator that applies its ``rules`` in favor-rare order,
     taken from each rule's match count over the whole column (the
@@ -872,25 +904,22 @@ class _FavorRareTable(Mutator):
     The mutator never counts by itself. ``_transform`` takes the
     caller-supplied ``rule_frequencies`` if there are any, else the
     counts its caller handed in (``apply`` and ``mutate_data_frame``
-    measure them with :func:`count_rule_matches`), else each Arrow
-    batch's own counts: the fallback of a stream without
-    ``rule_frequencies`` (MIGRATION.md "Streaming") and of a table
-    inside ``with_group``.
+    measure them with :func:`rule_counts`, also inside ``with_group``),
+    and hands ``_kernel`` the rule order.
 
-    ``_kernel`` is the inverse-option rule assignment of the phonetic
-    and regex tables (gecko/mutator.py:443-478): rules go most frequent
-    first, and a row that still has ``k`` matching rules left accepts
-    the current one with chance 1/k, so rare rules win. A subclass
-    supplies ``_rewrite``."""
+    ``_kernel`` is the Arrow inverse-option rule assignment of the
+    phonetic and regex tables (gecko/mutator.py:443-478): rules go most
+    frequent first, and a row that still has ``k`` matching rules left
+    accepts the current one with chance 1/k, so rare rules win. A
+    subclass supplies ``_rewrite``."""
 
     rules: list
     rule_frequencies = None
 
     def _rule_matches(self, values: np.ndarray) -> np.ndarray:
-        """``bool[rules, n]``: which rules match each value. The kernel
-        runs it on the distinct values of its batch and the count on
-        the distinct values of the frame, so the two cannot disagree
-        about what a match is."""
+        """``bool[rules, n]``: which rules match each value. The count
+        runs it on the distinct values of the frame, the Arrow kernel on
+        those of its batch."""
         raise NotImplementedError
 
     def _rewrite(self, values: np.ndarray, rule) -> np.ndarray:
@@ -905,11 +934,11 @@ class _FavorRareTable(Mutator):
             key=lambda r: (-counts[r], r),
         )
 
-    def _supplied_counts(self) -> Sequence[int]:
+    def _supplied_counts(self) -> Optional[Sequence[int]]:
         return self.rule_frequencies
 
-    def _needs_rule_counts(self) -> bool:
-        return self.rule_frequencies is None
+    def _rule_tables(self):
+        return [self] if self.rule_frequencies is None else []
 
     def _frequencies(self, counts: np.ndarray):
         return [int(c) for c in counts]
@@ -923,21 +952,18 @@ class _FavorRareTable(Mutator):
         back via ``rule_frequencies`` to (a) skip that job on repeated
         applications or (b) give a STREAM the dataset-global rule
         order, which a stream cannot measure itself (a static aggregate
-        over an unbounded input is undefined; MIGRATION.md
-        "Streaming")."""
+        over an unbounded input is undefined; MIGRATION.md "Streaming
+        rule order")."""
         return self._frequencies(count_rule_matches(df, [(column, self)], self.name)[0])
 
-    def _transform(self, col, rand, selected, counts=None):
-        if self.rule_frequencies is not None:
-            counts = self._supplied_counts()
-        order = None if counts is None else self._order_from(counts)
+    def _transform(self, col, rand, selected, counts):
+        supplied = self._supplied_counts()
+        order = self._order_from(counts[self] if supplied is None else supplied)
         return self._kernel(col, rand, selected, order)
 
-    def _kernel(self, col, rand, selected, order):
-        """Arrow kernel applying the rules in ``order`` (rule indices;
-        None = ``_order_from`` the batch's own match counts)."""
+    def _kernel(self, col, rand, selected, order: list[int]):
+        """Arrow kernel applying the rules in ``order`` (rule indices)."""
         rules, rule_matches, rewrite = self.rules, self._rule_matches, self._rewrite
-        order_from = self._order_from
 
         @F.pandas_udf(T.StringType())
         def _inverse_option(vals: pd.Series, sel: pd.Series, u: pd.Series) -> pd.Series:
@@ -953,10 +979,9 @@ class _FavorRareTable(Mutator):
             uniq_np = np.asarray(uniques, dtype=object)
             match = rule_matches(uniq_np)[:, codes]
             options = match.sum(axis=0).astype(np.float64)
-            rule_order = order_from(match.sum(axis=1)) if order is None else order
             au = u.to_numpy(np.float64)
             done = np.zeros(len(vals), dtype=bool)
-            for step, r in enumerate(rule_order):
+            for step, r in enumerate(order):
                 au = _expand_u(au, step + 1)
                 prob = np.where(options > 0, 1.0 / np.maximum(options, 1.0), 0.0)
                 rows = mask & ~done & match[r] & (au < prob)
@@ -983,7 +1008,7 @@ class _WholeValueReplacement(Mutator):
     def _eligible(self, col, rand):
         return col.isin(list(self.targets))
 
-    def _transform(self, col, rand, selected):
+    def _transform(self, col, rand, selected, counts):
         # pure Column algebra: a map-literal lookup plus a uniform pick
         # among the source's targets (gecko/mutator.py:595-599 equality
         # match)
@@ -1022,52 +1047,24 @@ class _InlineReplacement(_FavorRareTable):
         )
 
     def _supplied_counts(self):
+        if self.rule_frequencies is None:
+            return None
         return [int(self.rule_frequencies.get(src, 0)) for src in self.rules]
 
     def _frequencies(self, counts):
         return {src: int(c) for src, c in zip(self.rules, counts)}
 
     def _eligible(self, col, rand):
-        alts = "|".join(re.escape(s) for s in self.rules)
-        return col.rlike(f"(?:{alts})")
+        return F.exists(json_literal(self.rules, "array<string>"), lambda s: _contains(col, s))
 
     def _kernel(self, col, rand, selected, order):
-        """Arrow kernel for inline (substring) replacement: each selected
-        row takes the first source in ``order`` that it contains
-        (None = ``_order_from`` the matches among the batch's selected
-        rows)."""
-        sources, targets = self.rules, self.targets
-        rule_matches, order_from = self._rule_matches, self._order_from
-
-        @F.pandas_udf(T.StringType())
-        def _replace(vals: pd.Series, sel: pd.Series, u: pd.Series) -> pd.Series:
-            out = vals.copy()
-            mask = sel.fillna(False).to_numpy(dtype=bool)
-            if not mask.any():
-                return out
-            filled = vals.fillna("")
-            codes, uniques = pd.factorize(filled)
-            match = rule_matches(np.asarray(uniques, dtype=object))[:, codes] & mask
-            src_order = order_from(match.sum(axis=1)) if order is None else order
-            au = u.to_numpy(np.float64)
-            mutated = np.zeros(len(filled), dtype=bool)
-            for r in src_order:
-                rows = match[r] & ~mutated
-                if not rows.any():
-                    continue
-                src = sources[r]
-                tgts = targets[src]
-                tgt_idx = (au * len(tgts)).astype(np.int64)
-                for j in range(len(tgts)):
-                    rows_j = rows & (tgt_idx == j)
-                    if rows_j.any():
-                        out[rows_j] = filled[rows_j].str.replace(
-                            src, tgts[j], n=1, regex=False
-                        )
-                mutated |= rows
-            return out
-
-        return _replace(col, selected, rand.uniform(1))
+        # the first source in ``order`` that the value contains, spliced
+        # in for its first occurrence with one of its targets
+        ordered = [{"src": self.rules[r], "tgts": self.targets[self.rules[r]]} for r in order]
+        table = json_literal(ordered, "array<struct<src:string,tgts:array<string>>>")
+        first = F.get(F.filter(table, lambda e: _contains(col, e["src"])), 0)
+        mutated = _let(first, lambda e: replace_first(col, e["src"], _pick(rand, 1, e["tgts"])))
+        return F.when(selected, mutated).otherwise(col)
 
 
 def with_replacement_table(
@@ -1083,18 +1080,19 @@ def with_replacement_table(
     """Generic replacement table, whole-value or substring (inline)
     matching, optional bidirectional union (gecko/mutator.py:510-655).
 
-    Whole-value mode never leaves the JVM (broadcast map literal +
-    seeded pick). Inline mode reproduces the reference's
+    Both modes never leave the JVM: whole-value mode is a map-literal
+    lookup plus a seeded pick. Inline mode reproduces the reference's
     ascending-match-frequency first-occurrence semantics
-    (gecko/mutator.py:618-647), with the source frequencies from the
-    distinct-value count job — one per ``mutate_data_frame``, shared by
-    all its table steps — so rule precedence is dataset-wide,
-    deterministic under any partitioning, and exactly oracle-checkable.
-    ``rule_frequencies`` (inline mode; a ``{source: count}`` mapping,
-    typically from ``measure_rule_frequencies`` over historical data)
-    supplies those counts up front — no count job, and a STREAMING
-    frame gets the same dataset-global rule order as batch (without it,
-    streams fall back to batch-local ordering)."""
+    (gecko/mutator.py:618-647) as Column algebra over one table literal
+    in that order, with the source frequencies from the distinct-value
+    count job — one per ``mutate_data_frame``, shared by all its table
+    steps — so rule precedence is dataset-wide, deterministic under any
+    partitioning, and exactly oracle-checkable. ``rule_frequencies``
+    (inline mode; a ``{source: count}`` mapping, typically from
+    ``measure_rule_frequencies`` over historical data) supplies those
+    counts up front — no count job, and a STREAMING frame gets the same
+    dataset-global rule order as batch (without it, a stream raises
+    ``ValueError``: it cannot be counted)."""
     table = load_replacement_table(
         data_source, source_column, target_column, reverse=reverse,
         delimiter=delimiter, encoding=encoding,

@@ -12,21 +12,23 @@ joins, no shuffles, and nothing materialized until the caller acts.
 entries applied sequentially. Each step is a ``DataFrame -> DataFrame``
 fold; Catalyst collapses the chained when/otherwise projections, so an
 entire corruption pipeline typically executes as one stage plus one
-Arrow-UDF stage per table-driven mutator.
+Arrow-UDF stage per phonetic or regex table.
 
 The favor-rare table mutators (inline replacement, phonetic and regex
 tables) order their rules by global match counts, the one eager part of
 the chain. Before building it, ``mutate_data_frame`` counts every such
-step whose column no earlier step writes in ONE distinct-value job over
-the input (``count_rule_matches``, described as
-``gecko:mutate_data_frame:rule_frequencies``). A step that reads a
-column an earlier step wrote counts the mutated column in its own job,
-as the reference does; caller-supplied ``rule_frequencies`` and
-streaming input need no job. Only ``Mutator.apply``,
-``measure_rule_frequencies`` and ``mutate_data_frame`` start count
-jobs: the mutators take the counts they are handed and never count
-while their kernels are built. ``strict_p=True`` adds one labelled
-``avg(eligible)`` job per step (``gecko:<mutator>:strict_p``).
+table — a step's own or one inside its ``with_group`` — whose column no
+earlier step writes in ONE distinct-value job over the input
+(``rule_counts``, described as ``gecko:mutate_data_frame:rule_frequencies``).
+A step that reads a column an earlier step wrote counts the mutated
+column in its own job, as the reference does; caller-supplied
+``rule_frequencies`` need no job. A stream cannot be counted, so there a
+table without ``rule_frequencies`` raises ``ValueError``. Only
+``Mutator.apply``, ``measure_rule_frequencies`` and
+``mutate_data_frame`` start count jobs: the mutators take the rule
+order they are handed and never count while their kernels are built.
+``strict_p=True`` adds one labelled ``avg(eligible)`` job per step
+(``gecko:<mutator>:strict_p``).
 """
 
 from __future__ import annotations
@@ -38,7 +40,7 @@ from pyspark.sql import functions as F
 
 from gecko_spark.core import HashRandom, RandomSource, check_probability
 from gecko_spark.operators.generators import ColumnGenerator, GenContext
-from gecko_spark.operators.mutators import Mutator, count_rule_matches
+from gecko_spark.operators.mutators import Mutator, rule_counts
 
 __all__ = ["to_data_frame", "mutate_data_frame", "IDX_COLUMN"]
 
@@ -182,14 +184,12 @@ def mutate_data_frame(
                 raise ValueError("probability for mutator must be in range of (0, 1]")
             steps.append((len(steps), list(column_spec), p, mut))
 
-    counted = not df_in.isStreaming  # streams keep batch-local rule order
     # (step, column) pairs whose column no earlier step writes: their
     # counts over df_in equal those over the chain so far, so all of
     # them come from one job
     fused, written = [], set()
     for step, columns, _, mut in steps:
-        if counted and mut._needs_rule_counts():
-            fused += [(step, c, mut) for c in columns if c not in written]
+        fused += [(step, c, mut) for c in columns if c not in written]
         written.update(columns)
     counts = _rule_counts(df_in, fused)
 
@@ -200,22 +200,18 @@ def mutate_data_frame(
         else:
             keys = list(key_columns) if key_columns else list(df_out.columns)
             rand = HashRandom(seed, [F.col(k) for k in keys]).fork(step)
-        if counted and mut._needs_rule_counts():
-            # columns an earlier step wrote: the reference counts the
-            # mutated column, so count it over the chain so far
-            late = [(step, c, mut) for c in columns if (step, c) not in counts]
-            counts |= _rule_counts(df_out, late)
-        step_counts = {c: counts[(step, c)] for c in columns if (step, c) in counts}
+        # columns an earlier step wrote: the reference counts the
+        # mutated column, so count it over the chain so far
+        late = [(step, c, mut) for c in columns if (step, c) not in counts]
+        counts |= _rule_counts(df_out, late)
+        step_counts = [counts[(step, c)] for c in columns]
         df_out = mut._apply(df_out, columns, p, rand, strict_p, step_counts)
     return df_out
 
 
 def _rule_counts(df: DataFrame, entries: list) -> dict:
-    """Rule-match counts over ``df`` for ``(step, column, mutator)``
-    entries in one job, keyed by ``(step, column)``; no job when empty."""
-    if not entries:
-        return {}
-    vectors = count_rule_matches(
-        df, [(c, mut) for _, c, mut in entries], "mutate_data_frame"
-    )
-    return {(step, c): v for (step, c, _), v in zip(entries, vectors)}
+    """``rule_counts`` over ``df`` for ``(step, column, mutator)``
+    entries in one job, keyed by ``(step, column)``; no job when no
+    entry applies a table that needs counting."""
+    tables = rule_counts(df, [(c, mut) for _, c, mut in entries], "mutate_data_frame")
+    return {(step, c): t for (step, c, _), t in zip(entries, tables)}

@@ -108,7 +108,8 @@ def compact(
     retry, or the caller should schedule compaction in a read-quiet
     window. Crash-safe: a leftover ``__old__`` from a crashed run is
     restored (if ``path`` vanished) or cleared before starting, and the
-    data always exists in full under one of the two names."""
+    data always exists in full under one of the two names. The read and
+    the rewrite run as ``gecko:compact:rewrite``."""
     import os
     import shutil
 
@@ -130,10 +131,11 @@ def compact(
         shutil.rmtree(tmp)
 
     before = _count_files(path)
-    df = spark.read.format(fmt).load(path)
-    write_partitioned(
-        df, tmp, partition_by, files_per_partition=files_per_partition, fmt=fmt
-    )
+    with job_description(spark, "gecko:compact:rewrite"):
+        df = spark.read.format(fmt).load(path)
+        write_partitioned(
+            df, tmp, partition_by, files_per_partition=files_per_partition, fmt=fmt
+        )
     os.rename(path, old)
     os.rename(tmp, path)
     shutil.rmtree(old)

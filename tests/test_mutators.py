@@ -327,6 +327,112 @@ def test_cldr_charset_restriction(spark, cldr_file):
         assert v[0] in "ad"
 
 
+# -- Column kernels of keyboard typos and inline replacement -----------------
+# Both run as Column algebra; each is compared with a pure-Python model
+# of the same draws: the first match in the given order, the pick
+# int(u * n), and str.replace(src, tgt, 1).
+
+_EDGE_VALUES = [
+    None, "", "ab", "b", "abab", "bcab", "a\nb", "x\U0001F600ab", "e\u0301b",
+    "\U0001F600", "zzz", "ébab", "abc\n", "a",
+]
+_EDGE_KEYMAP = {
+    "ab": "xy\U0001F601", "b": "nm", "\n": "t", "\U0001F600": "e\u0301", "e\u0301": "ü",
+}
+_EDGE_INLINE = pd.DataFrame({
+    "s": ["ab", "ab", "bc", "b", "", "\n", "\U0001F600", "e\u0301"],
+    "t": ["X", "Y\U0001F601", "Z", "", "E", "N", "F", "é"],
+})
+
+
+def _edge_frame(spark):
+    vals = _EDGE_VALUES * 20
+    return spark.createDataFrame(list(enumerate(vals)), "id long, v string"), vals
+
+
+def _draws(df, rand):
+    """Per-id (u0, u1, u2) of ``apply``'s column-0 stream."""
+    r = rand.fork(0)
+    rows = df.select("id", *[r.uniform(s).alias(f"u{s}") for s in range(3)]).collect()
+    return {row["id"]: (row["u0"], row["u1"], row["u2"]) for row in rows}
+
+
+def _keymap_model(v, u, p, keymap):
+    pool = [] if v is None else [k for k in keymap if k in v]
+    if not pool or not u[0] < p:
+        return v
+    key = pool[int(u[1] * len(pool))]
+    nbrs = keymap[key]
+    return v.replace(key, nbrs[int(u[2] * len(nbrs))], 1)
+
+
+def _inline_model(v, u, p, targets, order):
+    if v is None or not any(s in v for s in targets) or not u[0] < p:
+        return v
+    src = next((s for s in order if s in v), None)
+    if src is None:
+        return v
+    tgts = targets[src]
+    return v.replace(src, tgts[int(u[1] * len(tgts))], 1)
+
+
+def _rands():
+    from gecko_spark.core import LcgRandom
+
+    return [HashRandom(5, ["id"]), LcgRandom("id", 6)]
+
+
+@pytest.mark.parametrize("p", [0.1, 1.0])
+def test_keymap_column_kernel_matches_model(spark, p):
+    df, vals = _edge_frame(spark)
+    mut = M._CldrKeymap(_EDGE_KEYMAP)
+    for rand in _rands():
+        u = _draws(df, rand)
+        got = dict(mut.apply(df, "v", p, rand=rand).collect())
+        expected = {i: _keymap_model(v, u[i], p, _EDGE_KEYMAP) for i, v in enumerate(vals)}
+        assert got == expected
+        assert sum(got[i] != v for i, v in enumerate(vals)) > (50 if p == 1.0 else 5)
+
+
+@pytest.mark.parametrize("p", [0.1, 1.0])
+def test_inline_column_kernel_matches_model(spark, p):
+    df, vals = _edge_frame(spark)
+    mut = M.with_replacement_table(_EDGE_INLINE, "s", "t", inline=True)
+    targets = mut.targets
+    counts = {s: sum(v is not None and s in v for v in vals) for s in targets}
+    order = sorted((s for s in targets if counts[s] > 0), key=lambda s: (counts[s], s))
+    for rand in _rands():
+        u = _draws(df, rand)
+        got = dict(mut.apply(df, "v", p, rand=rand).collect())
+        expected = {i: _inline_model(v, u[i], p, targets, order) for i, v in enumerate(vals)}
+        assert got == expected
+        assert sum(got[i] != v for i, v in enumerate(vals)) > (50 if p == 1.0 else 5)
+
+
+def test_inline_rule_matches_agree_with_column_match_test(spark):
+    """The count job's Python match test and the kernel's Column test
+    agree on every source and edge value (a null matches nothing)."""
+    mut = M.with_replacement_table(_EDGE_INLINE, "s", "t", inline=True)
+    df, _ = _edge_frame(spark)
+    df = df.filter("id < %d" % len(_EDGE_VALUES))
+    matches = [F.coalesce(M._contains(F.col("v"), F.lit(s)), F.lit(False)) for s in mut.rules]
+    got = np.array([list(r)[1:] for r in df.select("id", *matches).orderBy("id").collect()])
+    expected = mut._rule_matches(np.array(_EDGE_VALUES, dtype=object))
+    assert (got.T == expected).all()
+
+
+def test_keymap_eligibility_is_the_whole_key(spark):
+    """A row is eligible only if it holds a whole key: with the key "ab",
+    the "a" rows can never change, so under strict_p half the rows are
+    eligible, p = 0.5 rescales to 1 and every "ab" row changes."""
+    data = pd.DataFrame({"v": ["a", "ab"] * 100})
+    sdf = spark_from_pandas(data)
+    out = M._CldrKeymap({"ab": "xy"}).apply(sdf, ["v"], 0.5, strict_p=True, seed=3)
+    got = out.orderBy("__idx__").toPandas()["v"]
+    assert (got[data.v == "a"] == "a").all()
+    assert got[data.v == "ab"].isin(["x", "y"]).all()
+
+
 # -- driver ------------------------------------------------------------------
 
 

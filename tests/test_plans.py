@@ -102,6 +102,36 @@ def test_mutator_chain_adds_no_exchange(spark, fruit_freq):
         assert "from_json" not in p and "JsonToStructs" not in p, "table literals must fold"
 
 
+def test_keymap_and_inline_tables_stay_on_the_jvm(spark, fruit_freq, cldr_file):
+    """Keyboard typos and inline replacement are Column algebra: no
+    Python evaluation node and no exchange in the plan, and their table
+    literals fold."""
+    import pandas as pd
+
+    from gecko_spark.operators import generators as G
+    from gecko_spark.operators import mutators as M
+    from gecko_spark.plans.pipeline import mutate_data_frame, to_data_frame
+
+    base = to_data_frame(
+        spark, [("fruit", G.from_frequency_table(fruit_freq, "fruit", "count"))], 1000, seed=1
+    )
+    inline = pd.DataFrame({"s": ["an", "pp"], "t": ["AN", "p"]})
+    out = mutate_data_frame(
+        base,
+        [
+            ("fruit", (0.5, M.with_cldr_keymap_file(cldr_file))),
+            ("fruit", (0.5, M.with_replacement_table(inline, "s", "t", inline=True))),
+        ],
+        seed=2,
+    )
+    plan = _plan(out)
+    optimized = out._jdf.queryExecution().optimizedPlan().toString()
+    assert "Exchange" not in plan
+    assert "EvalPython" not in plan
+    for p in (plan, optimized):
+        assert "from_json" not in p and "JsonToStructs" not in p, "table literals must fold"
+
+
 def test_q6_filters_and_projection_reach_the_scan(spark):
     p = _plan(entry.queries()["q6_revenue_filter"](spark, SF))
     assert "PushedFilters: [IsNotNull(l_shipdate)" in p

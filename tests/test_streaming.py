@@ -806,9 +806,9 @@ def test_checkpoint_restart_heavy_hitters_state(spark, tmp_path):
 def test_stream_replacement_inline_global_order_with_supplied_frequencies(spark, tmp_path):
     """A stream given measured rule_frequencies applies the reference's
     dataset-GLOBAL favor-rare rule order and matches the batch output
-    row-for-row; without them it falls back to batch-local ordering,
-    which provably differs on a micro-batch whose local counts invert
-    the global order (VERDICT r5 'next' #4)."""
+    row-for-row, although file1's micro-batch counts invert that order;
+    without them a stream cannot order the rules and the plan build
+    raises ``ValueError``."""
     # file1: ab-heavy (local order bc<ab), file2: bc-heavy; global: ab=11 < bc=16
     f1 = pd.DataFrame({"id": range(0, 9), "v": ["abc"] * 4 + ["abz"] * 5})
     f2 = pd.DataFrame({"id": range(9, 21), "v": ["abc"] * 2 + ["xbc"] * 10})
@@ -826,27 +826,22 @@ def test_stream_replacement_inline_global_order_with_supplied_frequencies(spark,
     # global ascending order: 'ab' first -> every 'abc' row becomes 'Xc'
     assert (expected[f1[f1.v == "abc"].id] == "Xc").all()
 
-    def run_stream(mut, name):
-        stream = (
+    def stream():
+        return (
             spark.readStream.schema(batch.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(str(src))
         )
-        out = mutate_stream(stream, [("v", (1.0, mut))], seed=5)
-        _run(out, name)
-        return spark.sql(f"SELECT * FROM {name}").toPandas().set_index("id")["v"]
 
-    with_freqs = run_stream(
-        M.with_replacement_table(tbl, "s", "t", inline=True, rule_frequencies=freqs),
-        "repl_stream_global",
-    )
+    mut = M.with_replacement_table(tbl, "s", "t", inline=True, rule_frequencies=freqs)
+    _run(mutate_stream(stream(), [("v", (1.0, mut))], seed=5), "repl_stream_global")
+    with_freqs = spark.sql("SELECT * FROM repl_stream_global").toPandas().set_index("id")["v"]
     assert (with_freqs.sort_index() == expected.sort_index()).all()
 
-    without = run_stream(auto, "repl_stream_local")
-    # file1's local counts (ab=9 > bc=4) invert the order: its 'abc'
-    # rows take the locally-rarer 'bc' rule instead
-    assert (without[f1[f1.v == "abc"].id] == "aY").all()
-    assert not (without.sort_index() == expected.sort_index()).all()
+    with pytest.raises(ValueError, match="measure_rule_frequencies"):
+        mutate_stream(stream(), [("v", (1.0, auto))], seed=5)
+    with pytest.raises(ValueError, match="measure_rule_frequencies"):
+        auto.apply(stream(), ["v"], 1.0, seed=5)
 
 
 def test_stream_phonetic_global_order_with_supplied_frequencies(spark, tmp_path):

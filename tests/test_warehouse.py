@@ -142,6 +142,34 @@ def test_compact_reduces_files(spark, tmp_path):
     assert spark.read.parquet(out).count() == n_rows
 
 
+def test_compact_jobs_are_labelled(spark, tmp_path):
+    """``compact`` reads and rewrites under ``gecko:compact:rewrite``;
+    the tuple count of a multi-file rewrite keeps its own label, and the
+    caller's job description comes back afterwards."""
+    from gecko_spark.sources.sinks import compact
+
+    out = str(tmp_path / "littered")
+    df = spark.range(40).select("id", (F.col("id") % 4).cast("string").alias("p"))
+    df.repartition(8).write.partitionBy("p").parquet(out)
+    sc = spark.sparkContext
+    sc.setJobGroup("gecko-compact-labels", "caller", False)
+    try:
+        compact(spark, out, ["p"], files_per_partition=2)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    descriptions = [
+        store.job(j).description()
+        for j in sc.statusTracker().getJobIdsForGroup("gecko-compact-labels")
+    ]
+    labels = {d.get() if d.isDefined() else None for d in descriptions}
+    assert labels == {"gecko:compact:rewrite", "gecko:write_partitioned:partition_tuples"}
+    assert spark.read.parquet(out).count() == 40
+
+
 # -- corpus ingestion --------------------------------------------------------
 
 
