@@ -237,7 +237,11 @@ class Mutator:
         if eligible is None:
             return p
         with job_description(df.sparkSession, f"gecko:{self.name}:strict_p"):
-            row = df.select(F.avg(eligible.cast("double")).alias("pa")).first()
+            # a null test (a null value) counts as ineligible: avg
+            # would drop it from the denominator
+            row = df.select(
+                F.avg(F.coalesce(eligible, F.lit(False)).cast("double")).alias("pa")
+            ).first()
         p_actual = row["pa"] or 0.0
         if p_actual < p:
             warnings.warn(
@@ -723,7 +727,7 @@ class _WithFunction(Mutator):
         @F.pandas_udf(T.StringType())
         def _apply(vals: pd.Series, sel: pd.Series) -> pd.Series:
             out = vals.copy()
-            mask = sel.fillna(False).to_numpy(dtype=bool)
+            mask = _selection_mask(sel)
             # a None return stays null — str() would turn it into the
             # literal string "None"
             out[mask] = [
@@ -746,6 +750,13 @@ def with_function(func: Callable[..., str], *args, **kwargs) -> Mutator:
 # ---------------------------------------------------------------------------
 # Table-driven mutators
 # ---------------------------------------------------------------------------
+
+
+def _selection_mask(sel: pd.Series) -> np.ndarray:
+    """An Arrow kernel's selection flags as a ``bool`` array. A flag is
+    null where the value's eligibility test is null; such a row is not
+    selected."""
+    return sel.to_numpy(dtype=bool, na_value=False)
 
 
 def _expand_u(u: np.ndarray, salt: int) -> np.ndarray:
@@ -919,7 +930,7 @@ class _FavorRareTable(Mutator):
     def _rule_matches(self, values: np.ndarray) -> np.ndarray:
         """``bool[rules, n]``: which rules match each value. The count
         runs it on the distinct values of the frame, the Arrow kernel on
-        those of its batch."""
+        those of its batch's selected rows."""
         raise NotImplementedError
 
     def _rewrite(self, values: np.ndarray, rule) -> np.ndarray:
@@ -967,24 +978,27 @@ class _FavorRareTable(Mutator):
 
         @F.pandas_udf(T.StringType())
         def _inverse_option(vals: pd.Series, sel: pd.Series, u: pd.Series) -> pd.Series:
-            mask = sel.fillna(False).to_numpy(dtype=bool)
+            mask = _selection_mask(sel)
             if not mask.any():
                 return vals.copy()
             out_np = vals.to_numpy(dtype=object).copy()
-            # FACTORIZE the batch: rule matches and rewrites are pure
-            # functions of the VALUE, so they run once per distinct value
-            # and fan back out through the codes. The per-row accept/skip
-            # draws are untouched, so outputs are bit-identical.
-            codes, uniques = pd.factorize(vals.fillna(""))
+            # Only the selected rows run: each row's draws and options
+            # depend on that row alone. FACTORIZE them: rule matches and
+            # rewrites are pure functions of the VALUE, so they run once
+            # per distinct value and fan back out through the codes. The
+            # per-row accept/skip draws are untouched, so outputs are
+            # bit-identical.
+            picked = np.flatnonzero(mask)
+            codes, uniques = pd.factorize(vals[mask].fillna(""))
             uniq_np = np.asarray(uniques, dtype=object)
             match = rule_matches(uniq_np)[:, codes]
             options = match.sum(axis=0).astype(np.float64)
-            au = u.to_numpy(np.float64)
-            done = np.zeros(len(vals), dtype=bool)
+            au = u.to_numpy(np.float64)[mask]
+            done = np.zeros(len(picked), dtype=bool)
             for step, r in enumerate(order):
                 au = _expand_u(au, step + 1)
                 prob = np.where(options > 0, 1.0 / np.maximum(options, 1.0), 0.0)
-                rows = mask & ~done & match[r] & (au < prob)
+                rows = ~done & match[r] & (au < prob)
                 options[match[r] & ~rows] -= 1
                 if not rows.any():
                     continue
@@ -992,7 +1006,7 @@ class _FavorRareTable(Mutator):
                 new = rewrite(uniq_np[sel_codes], rules[r])[inverse]
                 changed = new != uniq_np[codes[rows]]
                 idx = np.flatnonzero(rows)[changed]
-                out_np[idx] = new[changed]
+                out_np[picked[idx]] = new[changed]
                 done[idx] = True
             return pd.Series(out_np, index=vals.index)
 

@@ -475,6 +475,37 @@ def test_strict_p_rescales_to_overall_rate(spark):
     assert 0.35 < frac < 0.45
 
 
+def test_strict_p_counts_null_rows_as_ineligible(spark):
+    """A null value's eligibility test is null, and it counts as
+    ineligible: half the rows null, strict p = 0.5 measures 0.5, rescales
+    to 1 and changes about 1000 rows, not 500."""
+    data = pd.DataFrame({"v": ["ab", None] * 1000})
+    sdf = spark_from_pandas(data)
+    out = M.with_delete().apply(sdf, "v", 0.5, strict_p=True)
+    joined = sdf.alias("a").join(out.alias("b"), "__idx__")
+    changed = joined.filter(~F.col("a.v").eqNullSafe(F.col("b.v"))).count()
+    assert abs(changed - 1000) <= 6 * (2000 * 0.5 * 0.5) ** 0.5
+
+
+def test_selection_mask_takes_null_flags_as_unselected():
+    """The Arrow kernels' selection mask: a null flag is not selected,
+    and no pandas warning is raised on the way."""
+    import warnings
+
+    cases = [
+        (pd.Series([True, None, False], dtype=object), [True, False, False]),
+        (pd.Series([True, False]), [True, False]),
+        (pd.Series([None, None], dtype=object), [False, False]),
+        (pd.Series([True, pd.NA], dtype="boolean"), [True, False]),
+    ]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        for sel, expected in cases:
+            mask = M._selection_mask(sel)
+            assert mask.dtype == bool
+            assert mask.tolist() == expected
+
+
 def spark_from_pandas(pdf):
     """Create a Spark DF with a unique key column for randomness."""
     from pyspark.sql import SparkSession
