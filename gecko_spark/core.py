@@ -98,6 +98,8 @@ def session_conf(
         "spark.driver.memory": driver_memory(),
         "spark.python.daemon.module": "gecko_spark.worker_daemon",
         "spark.executorEnv.PYTHONPATH": _PACKAGE_ROOT,
+        # one C1 and one C2 compiler thread (get_spark's "Driver JVM")
+        "spark.driver.defaultJavaOptions": "-XX:CICompilerCount=2",
         **(extra_conf or {}),
     }
 
@@ -125,6 +127,19 @@ def get_spark(
     cluster, set ``spark.python.daemon.module`` to
     ``gecko_spark.worker_daemon`` where ``gecko_spark`` is importable
     on the executors.
+
+    Driver JVM: ``spark.driver.defaultJavaOptions`` is
+    ``-XX:CICompilerCount=2``, HotSpot's smallest tiered JIT (one C1 and
+    one C2 compiler thread, so one C2 compilation at a time). HotSpot's
+    default of three threads on 4 cores is sized for an idle server;
+    here the threads compete with Spark's task threads, and concurrent
+    C2 compilations of Spark's generated methods held 30-80 MB of
+    compiler arenas, about 80 MB of the driver's peak memory. To
+    override it, pass ``spark.driver.defaultJavaOptions`` in
+    ``extra_conf`` (it replaces the flag), or put a later
+    ``-XX:CICompilerCount=<n>`` in ``spark.driver.extraJavaOptions``
+    (HotSpot keeps the last value). Like ``spark.driver.memory``, it
+    takes effect only when the session starts the JVM.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))

@@ -418,7 +418,15 @@ def iter_warc_records(
             # resynchronise at the next record boundary instead of
             # abandoning the file: one corrupt member must not cost the
             # other ~50k records of a 1 GB crawl segment
-            tail = _resync_to_record(fp)
+            while True:
+                try:
+                    tail = _resync_to_record(fp)
+                    break
+                except MalformedWarcError as scan_ex:
+                    # a corrupt or truncated gzip member met while
+                    # scanning: quarantine it too and scan on
+                    yield {"__malformed__": str(scan_ex), "record_seq": seq}
+                    seq += 1
             if tail is None:
                 return
             fp = io.BufferedReader(_ChainRaw(tail, fp), 1024 * 1024)

@@ -1,6 +1,6 @@
 """Session and randomness plumbing of ``gecko_spark.core``: the Python
-worker daemon that ``get_spark`` configures, and generated code that
-does not depend on the seed."""
+worker daemon and the driver JVM's JIT threads that ``get_spark``
+configures, and generated code that does not depend on the seed."""
 
 from __future__ import annotations
 
@@ -43,6 +43,21 @@ def test_session_conf_puts_the_package_on_the_workers_path():
     assert os.path.isfile(os.path.join(package, "worker_daemon.py"))
     conf = session_conf(4, {"spark.python.daemon.module": "pyspark.daemon"})
     assert conf["spark.python.daemon.module"] == "pyspark.daemon"
+
+
+def test_session_conf_starts_the_driver_with_two_compiler_threads():
+    """The driver JVM runs one C1 and one C2 compiler thread; an
+    ``extra_conf`` entry for the same key replaces the flag."""
+    conf = session_conf(4)
+    assert conf["spark.driver.defaultJavaOptions"] == "-XX:CICompilerCount=2"
+    conf = session_conf(4, {"spark.driver.defaultJavaOptions": "-XX:CICompilerCount=3"})
+    assert conf["spark.driver.defaultJavaOptions"] == "-XX:CICompilerCount=3"
+
+
+def test_driver_jvm_runs_with_two_compiler_threads(spark):
+    """The flag reaches the command line of the session's JVM."""
+    runtime = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean()
+    assert "-XX:CICompilerCount=2" in list(runtime.getInputArguments())
 
 
 def test_fresh_seed_compiles_no_new_code(spark, fruit_freq):

@@ -5,7 +5,10 @@ Each case runs under ``HashRandom`` at input partitions 1, 3 and 16 and
 at ``spark.sql.execution.arrow.maxRecordsPerBatch`` 7 and 10 000 (the
 Arrow kernels see batch boundaries), and every run must give the same
 multiset of rows. Both batch sizes run on one partition, whose batches
-hold the rows in input order. The mutator input holds nulls and
+hold the rows in input order. The batch size only reaches Python work,
+so the 10 000-row layout runs only for a case whose 7-row runs executed
+a plan with a Python node (an Arrow kernel, the favor-rare ``mapInPandas``
+count job or ``from_function``), read from the SQL status store. The mutator input holds nulls and
 duplicate rows; its first 21 rows are laid out so that a 7-row batch's
 match counts invert the frame's favor-rare rule order, which a kernel
 ordering its rules by its own batch would show.
@@ -14,6 +17,7 @@ ordering its rules by its own batch would show.
 from __future__ import annotations
 
 import hashlib
+import re
 
 import pandas as pd
 import pytest
@@ -22,8 +26,9 @@ from gecko_spark.operators import generators as G
 from gecko_spark.operators import mutators as M
 from gecko_spark.plans.pipeline import mutate_data_frame, to_data_frame
 
-# (input partitions, Arrow batch rows)
-LAYOUTS = [(1, 10_000), (1, 7), (3, 7), (16, 7)]
+# (input partitions, Arrow batch rows); the last only for Python work
+LAYOUTS = [(1, 7), (3, 7), (16, 7)]
+PYTHON_LAYOUT = (1, 10_000)
 
 # the 7-row batches of the first 21 rows count ab=7 > bc=4, then ab=4 <
 # bc=5, then bc=7; the frame counts ab=11 < bc=16 (cf. the f1/f2 split
@@ -175,14 +180,46 @@ def inputs(spark):
         df.unpersist()
 
 
+# physical plan nodes that run Python: ArrowEvalPython, BatchEvalPython,
+# MapInPandas, ...
+_PYTHON_NODE = re.compile(r"^[\s+\-:|*]*\w*(Python|InPandas|InArrow)\w*", re.M)
+
+
+def _last_execution_id(store) -> int:
+    n = store.executionsCount()
+    return store.executionsList(n - 1, 1).apply(0).executionId() if n else -1
+
+
+def _ran_python(spark, store, since: int) -> bool:
+    """Whether an SQL execution after ``since`` ran a Python node."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    # ids ascend, and the store evicts the oldest executions first
+    n = store.executionsCount()
+    execs = store.executionsList(max(0, n - 100), 100)
+    for i in reversed(range(execs.size())):
+        e = execs.apply(i)
+        if e.executionId() <= since:
+            return False
+        if _PYTHON_NODE.search(e.physicalPlanDescription()):
+            return True
+    assert n <= 100, "more than 100 new executions"
+    return False
+
+
 def _over_layouts(spark, build) -> dict:
     conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
     base = spark.conf.get(conf)
+    store = spark._jsparkSession.sharedState().statusStore()
+    since = _last_execution_id(store)
     digests = {}
     try:
         for parts, batch in LAYOUTS:
             spark.conf.set(conf, str(batch))
             digests[(parts, batch)] = _digest(build(parts))
+        if _ran_python(spark, store, since):
+            parts, batch = PYTHON_LAYOUT
+            spark.conf.set(conf, str(batch))
+            digests[PYTHON_LAYOUT] = _digest(build(parts))
     finally:
         spark.conf.set(conf, base)
     return digests
