@@ -128,6 +128,18 @@ def get_spark(
     ``gecko_spark.worker_daemon`` where ``gecko_spark`` is importable
     on the executors.
 
+    The daemon also keeps each Python task from re-reading the zip
+    archives it imports from. PySpark calls
+    ``importlib.invalidate_caches()`` at the start of every task, and on
+    Python 3.10-3.12 that makes every ``zipimporter`` re-read its
+    archive's directory (CPython gh-103200): with pyspark imported from
+    ``pyspark.zip``, 0.1-0.2 s of CPU per task. The daemon's
+    ``zipimporter.invalidate_caches`` re-reads an archive only when its
+    modification time or size changed, as Python 3.13 does
+    (:func:`gecko_spark.worker_daemon.reuse_zip_directories`). It
+    matters only on Python 3.10-3.12 with pyspark imported from a zip;
+    on a cluster it comes with ``spark.python.daemon.module``.
+
     Driver JVM: ``spark.driver.defaultJavaOptions`` is
     ``-XX:CICompilerCount=2``, HotSpot's smallest tiered JIT (one C1 and
     one C2 compiler thread, so one C2 compilation at a time). HotSpot's

@@ -1,5 +1,5 @@
 """Where a perfbench op's CPU goes: the driver, the JVM (and its JIT and
-GC), the Python workers.
+GC), the Python workers and the JVM's other child processes.
 
     python3 tools/jvm_costs.py --workload corrupt_tables --seed 1 --ops 5
     JAVA_TOOL_OPTIONS=-XX:NativeMemoryTracking=summary python3 tools/jvm_costs.py --workload linkage_export
@@ -10,8 +10,12 @@ heap), runs one warm-up op and then ``--ops`` ops, and prints the JVM's
 ``-XX:`` flags and then one JSON object per op:
 
 - ``tree_cpu_s``: CPU seconds of the whole process tree, split into
-  ``driver_cpu_s`` (this Python process), ``jvm_cpu_s`` and
-  ``workers_cpu_s`` (the Python worker daemon and the workers it forked);
+  ``driver_cpu_s`` (this Python process), ``jvm_cpu_s``,
+  ``python_workers_cpu_s`` (the Python worker daemon and the workers it
+  forked) and ``jvm_children_cpu_s`` (every other process the JVM
+  started, such as the ``chmod`` that Hadoop's local file system forks
+  for each file it writes, mostly read from the JVM's ``cutime`` once
+  they are reaped);
 - ``jit_threads_cpu_s`` and ``gc_threads_cpu_s``: the part of
   ``jvm_cpu_s`` spent on HotSpot's compiler and GC threads (per-thread
   ``/proc`` accounting; a compiler thread that exited mid-op is missed);
@@ -64,10 +68,12 @@ def _stat(path: str) -> tuple[str, list[str]] | None:
 
 def cpu_split() -> tuple[dict[str, float], dict[tuple[str, str], float]]:
     """CPU seconds so far of this process tree by process kind, and of
-    each JIT and GC thread of the JVM by ``(kind, tid)``. The JVM starts
-    the worker daemon, so the CPU of reaped workers and daemons (the
-    JVM's and the daemon's children) counts as ``workers``."""
-    out = dict.fromkeys(("driver", "jvm", "workers"), 0.0)
+    each JIT and GC thread of the JVM by ``(kind, tid)``. A Python
+    process below the JVM is the worker daemon or a worker it forked;
+    the daemon reaps its workers, so theirs is in its ``cutime``. Every
+    other process the JVM started counts as ``jvm_children``, and once
+    the JVM has reaped it, it is in the JVM's ``cutime``."""
+    out = dict.fromkeys(("driver", "jvm", "python_workers", "jvm_children"), 0.0)
     threads = {}
     me = os.getpid()
     for pid in probes.tree_pids(me):
@@ -79,7 +85,7 @@ def cpu_split() -> tuple[dict[str, float], dict[tuple[str, str], float]]:
             out["driver"] += _cpu_s(fields, children=False)
         elif name == "java":
             out["jvm"] += _cpu_s(fields, children=False)
-            out["workers"] += _cpu_s(fields, children=True) - _cpu_s(fields, children=False)
+            out["jvm_children"] += _cpu_s(fields, children=True) - _cpu_s(fields, children=False)
             for tid in os.listdir(f"/proc/{pid}/task"):
                 t = _stat(f"/proc/{pid}/task/{tid}/stat")
                 if t is None:
@@ -87,8 +93,10 @@ def cpu_split() -> tuple[dict[str, float], dict[tuple[str, str], float]]:
                 for kind, prefixes in (("jit_threads", _JIT_THREADS), ("gc_threads", _GC_THREADS)):
                     if t[0].startswith(prefixes):
                         threads[(kind, tid)] = _cpu_s(t[1], children=False)
+        elif name.startswith("python"):
+            out["python_workers"] += _cpu_s(fields, children=True)
         else:
-            out["workers"] += _cpu_s(fields, children=True)
+            out["jvm_children"] += _cpu_s(fields, children=True)
     return out, threads
 
 
