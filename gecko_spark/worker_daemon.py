@@ -69,7 +69,6 @@ def reuse_zip_directories(version: tuple[int, int] = sys.version_info[:2]) -> bo
             reread(self)
             stamps[self.archive] = now
 
-    invalidate_caches.__doc__ = reread.__doc__
     zipimport.zipimporter.invalidate_caches = invalidate_caches
     return True
 
